@@ -4,10 +4,15 @@ with explicit stage boundaries.
 The reference chains its modules by *re-running* the upstream pipeline
 inside each downstream main (data_loading_to_mysql_database.py:114,
 notion_data_ingestion.py:306-309 — SURVEY §3.3's architectural smell).
-Here each stage persists and the next stage reads the persisted table:
+Here the cycle is extracted once: ``extract`` runs one Spark job that
+scans the REST source, flattens the pages and pins the flattened items
+as a local checkpoint. Every later stage reads that pinned snapshot, so
+the CSV export, the warehouse and the Notion sync see the same rows and
+no stage re-fetches the API:
 
-1. ``extract``      — REST source → raw / analytics / summary DataFrames
-                      (bangumi_data_ingestion.main, :553-590)
+1. ``extract``      — REST source → pinned items → raw / analytics /
+                      summary DataFrames (bangumi_data_ingestion.main,
+                      :553-590)
 2. ``export_tables``— CSV (+ bounded Excel) presentation sinks (:467-548)
 3. ``load_warehouse`` / ``incremental_load``
                     — column-pruned warehouse write, then keyed snapshot
@@ -72,7 +77,15 @@ def extract(
     page_limit: int = 100,
 ) -> dict[str, DataFrame]:
     """Stage 1: paginated scan (one input partition per non-empty
-    category cell) → flatten → the three reference tables."""
+    category cell) → flatten → the three reference tables.
+
+    Runs exactly one Spark job: the flattened items are materialized
+    with an eager ``localCheckpoint`` (the reference's one-shot
+    in-memory frame), which also cuts the lineage back to the source.
+    The returned tables are lazy views over that snapshot, so no later
+    action re-reads the pages, and a live API that changes mid-cycle
+    cannot give two stages different rows. The checkpoint's blocks are
+    freed by Spark's ContextCleaner once the tables are dropped."""
     spark.dataSource.register(PaginatedRestDataSource)
     pages = (
         spark.read.format("paginated_rest")
@@ -81,7 +94,7 @@ def extract(
         .option("page_limit", str(page_limit))
         .load()
     )
-    items = items_from_pages(pages)
+    items = items_from_pages(pages).localCheckpoint(eager=True)
 
     # planning metadata: probe every cell (incl. empty ones — the summary
     # reports them with 0 fetched, reference :487-499)

@@ -67,10 +67,10 @@ def write_excel(
     """Bounded multi-sheet Excel export (driver-side, Arrow collect).
 
     Raises NotImplementedError when no Excel engine (openpyxl/xlsxwriter)
-    is installed — the Spark-side plumbing (bounding, collection, column
-    sizing) is real and tested via the ``_sheet_frames`` helper.
+    is installed, before collecting anything — the Spark-side plumbing
+    (bounding, collection, column sizing) is real and tested via the
+    ``_sheet_frames`` helper.
     """
-    frames = _sheet_frames(sheets, max_rows)
     try:
         import openpyxl  # noqa: F401
 
@@ -87,6 +87,7 @@ def write_excel(
             ) from e
     import pandas as pd
 
+    frames = _sheet_frames(sheets, max_rows)
     with pd.ExcelWriter(path, engine=engine) as writer:
         for name, pdf in frames.items():
             pdf.to_excel(writer, sheet_name=name[:31], index=False)

@@ -224,7 +224,11 @@ class PaginatedRestReader(DataSourceReader):
                 parts.append(CellPartition(cell_id=cell_id, total=total))
         return parts
 
-    def read(self, partition: CellPartition):
+    def read(self, partition: CellPartition | None):
+        # Spark reads one ``None`` partition when ``partitions()`` is
+        # empty (every probed cell was empty): that scan has no rows.
+        if partition is None:
+            return
         t = self._transport()
         if self.pagination == "cursor":
             yield from self._read_cursor(t, partition)

@@ -7,9 +7,11 @@ main()s (SURVEY §3) — run as explicit stages over persisted tables.
 
 from __future__ import annotations
 
+import csv
 import glob
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -149,6 +151,49 @@ def test_notion_sync_insert_update_softdelete(spark, tables, tmp_path):
     assert deletes[0]["properties"]["is_active"] == {"checkbox": False}
     titled = [p for p in posted if "name_cn" in p["properties"]]
     assert len(titled) == 5  # 3 inserts + 2 updates carry full properties
+
+
+def test_extract_of_only_empty_cells(spark, tmp_path):
+    # every probed cell is empty → the scan plans no partition at all
+    for cell in ("2_1", "4_1"):
+        (tmp_path / f"{cell}_page0.json").write_text(json.dumps(_page(0, 0, [])))
+    empty = pipeline.extract(
+        spark, cells=["2_1", "4_1"], fixture_dir=str(tmp_path), user_id="tester"
+    )
+    assert empty["raw"].count() == 0
+    assert empty["analytics"].count() == 0
+    summary = {r["cell_id"]: r for r in empty["summary"].collect()}
+    assert set(summary) == {"2_1", "4_1"}  # one zero row per cell (:487-499)
+    for row in summary.values():
+        assert row["fetched_items"] == 0 and row["completion_pct"] == 0.0
+
+
+def _csv_records(path):
+    with open(path, encoding="utf-8-sig", newline="") as f:
+        return sum(1 for _ in csv.reader(f)) - 1  # minus the header
+
+
+def test_one_snapshot_feeds_the_whole_cycle(spark, fixture_dir, tmp_path):
+    """Once extract returns, the pages are no longer read: every stage
+    runs on the pinned snapshot even after the source is gone."""
+    pages = shutil.copytree(fixture_dir, tmp_path / "pages")
+    snap = pipeline.extract(spark, cells=CELLS, fixture_dir=str(pages), user_id="tester")
+    shutil.rmtree(pages)
+
+    paths = pipeline.export_tables(snap, str(tmp_path / "export"))
+    assert {n: _csv_records(paths[n]) for n in ("raw", "analytics", "summary")} == {
+        "raw": 5, "analytics": 5, "summary": 3,
+    }
+    wh = str(tmp_path / "wh")
+    assert pipeline.load_warehouse(snap, wh)["n_rows"] == 5
+    assert pipeline.incremental_load(spark, snap["analytics"], wh)["initial_load"] == 5
+    again = pipeline.incremental_load(spark, snap["analytics"], wh)
+    assert (again["inserts"], again["deletes"], again["updates"]) == (0, 0, 5)
+    out = tmp_path / "notion"
+    out.mkdir()
+    existing = spark.createDataFrame([(1,), (2,), (777,)], "subject_id: long")
+    metrics = pipeline.notion_sync(snap["analytics"], existing, FileTransport(str(out)))
+    assert metrics == {"inserted": 3, "updated": 2, "soft_deleted": 1, "errors": 0}
 
 
 def test_run_report(tmp_path):
