@@ -4,15 +4,16 @@ with explicit stage boundaries.
 The reference chains its modules by *re-running* the upstream pipeline
 inside each downstream main (data_loading_to_mysql_database.py:114,
 notion_data_ingestion.py:306-309 — SURVEY §3.3's architectural smell).
-Here the cycle is extracted once: ``extract`` runs one Spark job that
-scans the REST source, flattens the pages and pins the flattened items
-as a local checkpoint. Every later stage reads that pinned snapshot, so
-the CSV export, the warehouse and the Notion sync see the same rows and
-no stage re-fetches the API:
+Here the cycle is extracted once: ``extract`` probes every cell on the
+driver, then runs one Spark job that fetches and flattens the non-empty
+cells in a single ``mapInArrow`` pass (one task per core) and pins the
+flattened items as a local checkpoint. Every later stage reads that
+pinned snapshot, so the CSV export, the warehouse and the Notion sync
+see the same rows and no stage re-fetches the API:
 
-1. ``extract``      — REST source → pinned items → raw / analytics /
-                      summary DataFrames (bangumi_data_ingestion.main,
-                      :553-590)
+1. ``extract``      — probe → fetch + flatten → pinned items → raw /
+                      analytics / summary DataFrames
+                      (bangumi_data_ingestion.main, :553-590)
 2. ``export_tables``— CSV (+ bounded Excel) presentation sinks (:467-548)
 3. ``load_warehouse`` / ``incremental_load``
                     — column-pruned warehouse write, then keyed snapshot
@@ -41,10 +42,10 @@ from .sinks.rest import write_rest
 from .sources.bangumi import (
     analytics_table,
     category_summary,
-    items_from_pages,
+    fetch_items,
     raw_table,
 )
-from .sources.rest import PaginatedRestDataSource, ReplayTransport
+from .sources.rest import ReplayTransport
 
 # Columns dropped before the warehouse load (reference drops 15
 # presentation-only analytics columns, data_loading_to_mysql_database.py:130-141);
@@ -76,8 +77,15 @@ def extract(
     user_id: str,
     page_limit: int = 100,
 ) -> dict[str, DataFrame]:
-    """Stage 1: paginated scan (one input partition per non-empty
-    category cell) → flatten → the three reference tables.
+    """Stage 1: probe → fetch and flatten → the three reference tables.
+
+    Every cell is probed once, on the driver (reference
+    get_all_category_totals :328-359); the summary reports empty cells
+    with 0 fetched (:487-499), and only the non-empty ones are fetched.
+    Those sit in a local frame of min(cells, defaultParallelism)
+    partitions, and one ``mapInArrow`` (``fetch_items``) pages through
+    and flattens each partition's cells in a single Python pass, one
+    task per partition.
 
     Runs exactly one Spark job: the flattened items are materialized
     with an eager ``localCheckpoint`` (the reference's one-shot
@@ -86,27 +94,22 @@ def extract(
     action re-reads the pages, and a live API that changes mid-cycle
     cannot give two stages different rows. The checkpoint's blocks are
     freed by Spark's ContextCleaner once the tables are dropped."""
-    spark.dataSource.register(PaginatedRestDataSource)
-    pages = (
-        spark.read.format("paginated_rest")
-        .option("cells", json.dumps(cells))
-        .option("fixture_dir", fixture_dir)
-        .option("page_limit", str(page_limit))
-        .load()
-    )
-    items = items_from_pages(pages).localCheckpoint(eager=True)
-
-    # planning metadata: probe every cell (incl. empty ones — the summary
-    # reports them with 0 fetched, reference :487-499)
     transport = ReplayTransport(fixture_dir)
-    totals = spark.createDataFrame(
-        [(c, transport.probe_total(c)) for c in cells],
-        "cell_id string, total_items bigint",
-    )
+    totals = [(c, transport.probe_total(c)) for c in cells]
+    live = [(c, n) for c, n in totals if n > 0]
+    # A list frame leaves the items' size unknown to the planner (a local
+    # Arrow relation would size them at a few bytes per cell and make
+    # later joins broadcast them), but Spark slices it into
+    # defaultParallelism partitions, empty ones too when cells are few:
+    # coalescing merges those away.
+    tasks = max(1, min(len(live), spark.sparkContext.defaultParallelism))
+    probed = spark.createDataFrame(live, "cell_id string, total bigint").coalesce(tasks)
+    items = fetch_items(probed, transport, page_limit).localCheckpoint(eager=True)
+    totals_df = spark.createDataFrame(totals, "cell_id string, total_items bigint")
     return {
         "raw": raw_table(items, user_id),
         "analytics": analytics_table(items),
-        "summary": category_summary(items, totals),
+        "summary": category_summary(items, totals_df),
     }
 
 

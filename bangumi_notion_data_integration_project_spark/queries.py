@@ -3597,6 +3597,13 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Peel budget of parts_kcore, shared by the query and its unrolled
+# oracle (k_core's default). A uniform-part graph near k=80 can need 15
+# rounds (perfbench query_batch seed 14); a budget the peel exhausts
+# raises, so it must sit well above what valid inputs need.
+KCORE_PEEL_ROUNDS = 30
+
+
 def q_parts_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core of the co-purchase graph (operators/graph.py:k_core,
     k=80): iteratively peel parts with fewer than 80 distinct
@@ -3605,9 +3612,9 @@ def q_parts_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalable route to "the dense heart of the graph" — each round is a
     degree aggregate + two node-sized semi joins, converging in ≤6
     rounds here; the loop fails loudly if the budget exhausts. The
-    oracle unrolls eight peel rounds declaratively (extra rounds are
-    fixpoint no-ops), the same unrolled-iteration pattern as the
-    pagerank oracle."""
+    oracle unrolls the same ``KCORE_PEEL_ROUNDS`` declaratively (extra
+    rounds are fixpoint no-ops), the same unrolled-iteration pattern as
+    the pagerank oracle."""
     from .operators.graph import k_core
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -3618,7 +3625,7 @@ def q_parts_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    core = k_core(edges, 80, max_rounds=12).localCheckpoint(eager=False)
+    core = k_core(edges, 80, max_rounds=KCORE_PEEL_ROUNDS).localCheckpoint(eager=False)
     deg = (
         core.select(F.col("a").alias("l_partkey"))
         .unionAll(core.select(F.col("b").alias("l_partkey")))
@@ -10403,13 +10410,14 @@ ORACLES: dict[str, str] = {
 }
 
 
-def _kcore_oracle(k: int = 80, rounds: int = 12) -> str:
+def _kcore_oracle(k: int = 80, rounds: int = KCORE_PEEL_ROUNDS) -> str:
     """Unrolled-iteration oracle for q_parts_kcore (the pagerank-oracle
     pattern): each peel round is a degree filter + edge restriction;
-    rounds past the fixpoint are no-ops. The unroll count matches the
-    engine's max_rounds=12 EXACTLY: fewer oracle rounds would mismatch
-    a correct engine result if a fixture ever needed 9-12 peels (the
-    engine raises loudly past 12, so >12 cannot slip through)."""
+    rounds past the fixpoint are no-ops. The unroll count is the
+    engine's budget, ``KCORE_PEEL_ROUNDS``: fewer oracle rounds would
+    mismatch a correct engine result whenever a graph needs more peels
+    than the oracle unrolls (the engine raises loudly past its budget,
+    so a longer peel cannot slip through)."""
     sql = """
         WITH e0 AS MATERIALIZED (
           SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b

@@ -1,12 +1,15 @@
-"""Bangumi collection flatten: raw API pages → raw / analytics / summary
-tables.
+"""Bangumi collection flatten: probed cells → item rows → raw /
+analytics / summary tables.
 
-The one place Python touches row data: ``items_from_pages`` uses
-``mapInPandas`` (Arrow-batched) because the infobox payload is ragged —
-values are string | {"v": ...} | list[dict|string] (reference
-parse_infobox, bangumi_data_ingestion.py:263-295) — which defeats any
-static from_json schema (SURVEY §7.3 risk 1). Everything downstream of
-that boundary is native Catalyst expressions.
+The one place Python touches row data: ``fetch_items`` runs one
+``mapInArrow`` over the probed cells that pages through each cell
+(``sources/rest.offset_pages``), flattens every item and yields one
+Arrow batch per cell. The infobox payload is ragged — values are
+string | {"v": ...} | list[dict|string] (reference parse_infobox,
+bangumi_data_ingestion.py:263-295) — which defeats any static
+from_json schema (SURVEY §7.3 risk 1), so it is normalized in Python
+on the way into the batch. Everything downstream of that boundary is
+native Catalyst expressions.
 
 Reference parity map:
 - item flatten + projection  → bangumi_data_ingestion.py:391-431 (P1)
@@ -24,17 +27,18 @@ Reference parity map:
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from ..functions.scalar import coalesce_nonempty, map_multikey_coalesce, truncate_str
 from ..functions.semistructured import array_join_nonnull, positional_pivot, tags_to_names
-from .rest import PAGE_LIMIT
+from .rest import PAGE_LIMIT, offset_pages
 
 ITEMS_SCHEMA = (
     "cell_id string, subject_id bigint, created_at string, updated_at string, "
@@ -109,25 +113,39 @@ def _flatten_item(cell_id: str, item: dict) -> dict:
     }
 
 
-def items_from_pages(pages: DataFrame) -> DataFrame:
-    """Explode raw page JSON into one row per collection item.
+def items_arrow_schema() -> pa.Schema:
+    """``ITEMS_SCHEMA`` as an Arrow schema. Call it on the driver: the
+    DDL parser lives in the JVM."""
+    return to_arrow_schema(_parse_datatype_string(ITEMS_SCHEMA))
 
-    Arrow-batched mapInPandas: each batch holds whole pages (~100 items
-    each), so Python-side cost is one json.loads per page, not per row.
-    """
 
-    def explode_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cell_id, page_json in zip(pdf["cell_id"], pdf["page"]):
-                payload = json.loads(page_json)
-                for item in payload.get("data") or []:
-                    rows.append(_flatten_item(cell_id, item))
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.split(" ")[0]: [] for f in ITEMS_SCHEMA.split(", ")}
-            )
+def items_batch(cell_id: str, pages: Iterable[dict], schema: pa.Schema) -> pa.RecordBatch:
+    """One cell's pages as one Arrow batch in ``schema``
+    (``items_arrow_schema()``): a ``_flatten_item`` row per item, with
+    the infobox dict as the ``(key, value)`` list an Arrow map takes."""
+    rows = []
+    for payload in pages:
+        for item in payload.get("data") or []:
+            row = _flatten_item(cell_id, item)
+            row["infobox"] = list(row["infobox"].items())
+            rows.append(row)
+    return pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return pages.mapInPandas(explode_pages, schema=ITEMS_SCHEMA)
+
+def fetch_items(cells: DataFrame, transport, page_limit: int = PAGE_LIMIT) -> DataFrame:
+    """Fetch and flatten in one Python pass: one ``mapInArrow`` over a
+    ``cell_id`` frame runs the page loop for each cell in its partition
+    and yields that cell's items as one batch, one row per collection
+    item in ``ITEMS_SCHEMA``. Pages never cross into the JVM as JSON."""
+    schema = items_arrow_schema()
+
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for cell_id in batch.column("cell_id").to_pylist():
+                pages = (p for _, p in offset_pages(transport, cell_id, page_limit))
+                yield items_batch(cell_id, pages, schema)
+
+    return cells.mapInArrow(fetch, ITEMS_SCHEMA)
 
 
 def raw_table(items: DataFrame, user_id: str) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Paginated REST scan as a Spark 4 Python Data Source.
+"""Paginated REST scan: transports, the offset page loop, and a Spark 4
+Python Data Source over them.
 
 Reference semantics (SURVEY §2.1): offset pagination with page size 100
 (S1, bangumi_data_ingestion.py:155-258), a limit=1 count probe sizing
@@ -6,12 +7,16 @@ each scan (S2, :105-153), one scan cell per (subject_type,
 collection_type) pair pruned when empty (S3, :328-359), retry with
 exponential backoff and a 429 penalty sleep (S6, :66-90,117-147).
 
-Spark-first restatement: each category cell is one ``InputPartition``,
-so cells fetch **in parallel across executors** instead of the
-reference's serial loop; empty cells are pruned at planning time
-(partition pruning); the page loop + backoff live inside the partition
-reader. The source emits raw page JSON (one row per page) — all
-flattening stays declarative in DataFrame land (sources/bangumi.py).
+``offset_pages`` is the one copy of the offset page loop. Two callers
+page through it:
+
+- ``pipeline.extract`` (the sync path) probes every cell once on the
+  driver and runs the loop inside one ``mapInArrow`` that also flattens
+  the items (``sources/bangumi.fetch_items``), at most one task per core.
+- ``spark.read.format("paginated_rest")`` (``PaginatedRestDataSource``),
+  the public connector: one ``InputPartition`` per non-empty cell,
+  emitting raw page JSON (one row per page). It also serves the
+  cursor-paginated readback (S5), which has no count probe.
 
 Transports:
 - ``HttpTransport`` — requests.Session with urllib3 Retry (429/5xx),
@@ -25,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterator
 
 # patchable alias: tests mock THIS, not time.sleep — patching the global
 # time module's sleep intercepts every other thread in the process (Spark
@@ -140,6 +146,26 @@ class HttpTransport:
         return int(self.fetch_page(cell_id, 0, 1).get("total", 0))
 
 
+def offset_pages(transport, cell_id: str, page_limit: int) -> Iterator[tuple[int, dict]]:
+    """The offset page loop (reference fetch_single_category :155-258):
+    fetch pages of ``page_limit`` items, advancing ``offset += limit``
+    until a page comes back empty or the reported total is reached.
+    Yields ``(offset, payload)`` for every non-empty page. The one copy
+    of the loop: the ``paginated_rest`` reader and ``pipeline.extract``
+    both page through it."""
+    offset = 0
+    page_index = 0
+    while True:
+        payload = transport.fetch_page(cell_id, page_index, page_limit)
+        if not payload.get("data"):
+            return
+        yield offset, payload
+        offset += page_limit
+        page_index += 1
+        if offset >= payload.get("total", 0):
+            return
+
+
 @dataclass
 class CellPartition(InputPartition):
     cell_id: str
@@ -233,20 +259,8 @@ class PaginatedRestReader(DataSourceReader):
         if self.pagination == "cursor":
             yield from self._read_cursor(t, partition)
             return
-        # Executor-side page loop (reference fetch_single_category
-        # :155-258): advance offset until page empty or total reached.
-        offset = 0
-        page_index = 0
-        while True:
-            payload = t.fetch_page(partition.cell_id, page_index, self.page_limit)
-            data = payload.get("data") or []
-            if not data:
-                break
+        for offset, payload in offset_pages(t, partition.cell_id, self.page_limit):
             yield (partition.cell_id, offset, json.dumps(payload, ensure_ascii=False))
-            offset += self.page_limit
-            page_index += 1
-            if offset >= payload.get("total", 0):
-                break
 
     def _read_cursor(self, t, partition: CellPartition):
         # Cursor-follow loop (reference get_existing_records pagination,

@@ -4,7 +4,20 @@ the prepend import mode)."""
 
 from __future__ import annotations
 
+import contextlib
 import math
+
+
+@contextlib.contextmanager
+def job_group(spark, group):
+    """Tag the Spark jobs run inside the block with ``group``; yields a
+    callable returning the group's job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def py_norm_p(z: float) -> float:

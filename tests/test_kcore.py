@@ -75,3 +75,18 @@ def test_kcore_validates_args(spark):
         k_core(df, 0)
     with pytest.raises(ValueError):
         k_core(df, 2, on_nonconverged="ignore")
+
+
+def test_kcore_long_peel_converges_under_the_query_budget(spark):
+    # a triangle with a 20-node tail hanging off one corner: under k=2
+    # only the tail's free end has degree 1, so each round peels one
+    # tail node and the fixpoint takes 20 rounds
+    from bangumi_notion_data_integration_project_spark.queries import KCORE_PEEL_ROUNDS
+
+    triangle = [(0, 1), (0, 2), (1, 2)]
+    tail = [(2, 3)] + [(i, i + 1) for i in range(3, 22)]
+    df = _frame(spark, triangle + tail)
+    with pytest.raises(RuntimeError, match="still peeling"):
+        k_core(df, 2, max_rounds=15)  # needs more than 15 rounds
+    out = {tuple(r) for r in k_core(df, 2, max_rounds=KCORE_PEEL_ROUNDS).collect()}
+    assert out == set(triangle)

@@ -14,10 +14,12 @@ import os
 import shutil
 
 import pytest
+from _helpers import job_group
 from pyspark.sql import functions as F
 
 from bangumi_notion_data_integration_project_spark import pipeline
 from bangumi_notion_data_integration_project_spark.sinks.rest import FileTransport
+from bangumi_notion_data_integration_project_spark.sources.rest import ReplayTransport
 
 
 def _page(total, offset, items):
@@ -151,6 +153,45 @@ def test_notion_sync_insert_update_softdelete(spark, tables, tmp_path):
     assert deletes[0]["properties"]["is_active"] == {"checkbox": False}
     titled = [p for p in posted if "name_cn" in p["properties"]]
     assert len(titled) == 5  # 3 inserts + 2 updates carry full properties
+
+
+@pytest.mark.parametrize("extra_cells", [0, 1])
+def test_extract_runs_one_job_of_one_task_per_core(spark, tmp_path, extra_cells):
+    """One job, its tasks sized to the cores: fewer non-empty cells
+    than cores give a task per cell, more give a task per core."""
+    cores = spark.sparkContext.defaultParallelism
+    n_live = 2 if not extra_cells else cores + extra_cells
+    cells = [f"2_{i}" for i in range(n_live + 1)]
+    for i, cell in enumerate(cells[:-1]):
+        (tmp_path / f"{cell}_page0.json").write_text(
+            json.dumps(_page(1, 0, [_item(i)])), encoding="utf-8"
+        )
+    (tmp_path / f"{cells[-1]}_page0.json").write_text(json.dumps(_page(0, 0, [])))
+    with job_group(spark, f"extract_contract_{n_live}") as jobs:
+        snap = pipeline.extract(spark, cells=cells, fixture_dir=str(tmp_path), user_id="t")
+    assert len(jobs()) == 1
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in jobs() for s in tracker.getJobInfo(j).stageIds}
+    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == min(n_live, cores)
+    assert snap["raw"].count() == n_live
+    # the planner must not size the items by the probed cells: a tiny
+    # estimate would broadcast them into every later join
+    stats = snap["analytics"]._jdf.queryExecution().optimizedPlan().stats()
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    assert int(str(stats.sizeInBytes())) > threshold
+
+
+def test_extract_probes_each_cell_once_on_the_driver(spark, fixture_dir, monkeypatch):
+    probed = []
+    probe = ReplayTransport.probe_total
+
+    def counting_probe(self, cell_id):
+        probed.append(cell_id)
+        return probe(self, cell_id)
+
+    monkeypatch.setattr(ReplayTransport, "probe_total", counting_probe)
+    pipeline.extract(spark, cells=CELLS, fixture_dir=fixture_dir, user_id="tester")
+    assert sorted(probed) == sorted(CELLS)
 
 
 def test_extract_of_only_empty_cells(spark, tmp_path):

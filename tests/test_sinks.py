@@ -3,11 +3,11 @@ JDBC prepare, row-wise REST sink with accumulator counters."""
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 
 import pytest
+from _helpers import job_group
 
 from bangumi_notion_data_integration_project_spark.sinks.files import (
     UTF8_BOM,
@@ -45,25 +45,13 @@ def test_write_csv_distributed(spark, tmp_path):
     assert files  # distributed layout intact
 
 
-@contextlib.contextmanager
-def _job_group(spark, group):
-    """Tag the jobs run inside the block with ``group``; yields a
-    callable returning the group's job ids."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc._jsc.clearJobGroup()
-
-
 def test_excel_gated_but_bounded_frames_work(spark, tmp_path):
-    with _job_group(spark, "excel_frames") as jobs:
+    with job_group(spark, "excel_frames") as jobs:
         frames = _sheet_frames({"raw": _df(spark)}, max_rows=1)
     assert jobs()  # collecting the sheets runs jobs
     assert len(frames["raw"]) == 1  # bounded
     assert isinstance(frames["raw"]["tags"][0], str)  # stringified
-    with _job_group(spark, "excel_gated") as jobs:
+    with job_group(spark, "excel_gated") as jobs:
         with pytest.raises(NotImplementedError):
             write_excel({"raw": _df(spark)}, str(tmp_path / "x.xlsx"))
     assert jobs() == []  # no engine → refused before any sheet is collected

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 from bangumi_notion_data_integration_project_spark.sources.bangumi import (
     analytics_table,
     category_summary,
-    items_from_pages,
+    _flatten_item,
+    fetch_items,
+    items_arrow_schema,
+    items_batch,
     normalize_infobox_value,
     raw_table,
 )
@@ -100,6 +103,11 @@ def _read_pages(spark, fixture_dir):
     )
 
 
+def _fetch_items(spark, fixture_dir):
+    cells = spark.createDataFrame([("2_1",), ("2_2",), ("3_1",)], "cell_id string")
+    return fetch_items(cells, ReplayTransport(fixture_dir), PAGE_LIMIT_TEST)
+
+
 def test_normalize_infobox_value_raggedness():
     # reference parse_infobox :277-291
     assert normalize_infobox_value("s") == "s"
@@ -123,7 +131,7 @@ def test_replay_source_pagination_and_pruning(spark, fixture_dir):
 
 
 def test_items_flatten_edge_cases(spark, fixture_dir):
-    items = items_from_pages(_read_pages(spark, fixture_dir))
+    items = _fetch_items(spark, fixture_dir)
     got = {r["subject_id"]: r for r in items.collect()}
     assert len(got) == 6
     # ragged infobox normalized per reference rules
@@ -137,7 +145,7 @@ def test_items_flatten_edge_cases(spark, fixture_dir):
 
 
 def test_raw_table_semantics(spark, fixture_dir):
-    raw = raw_table(items_from_pages(_read_pages(spark, fixture_dir)), user_id="u1")
+    raw = raw_table(_fetch_items(spark, fixture_dir), user_id="u1")
     got = {r["subject_id"]: r for r in raw.collect()}
     assert got[0]["user_id"] == "u1"
     assert got[0]["subject_type"] == 2 and got[0]["collection_type"] == 1
@@ -148,7 +156,7 @@ def test_raw_table_semantics(spark, fixture_dir):
 
 
 def test_analytics_table_semantics(spark, fixture_dir):
-    an = analytics_table(items_from_pages(_read_pages(spark, fixture_dir)))
+    an = analytics_table(_fetch_items(spark, fixture_dir))
     got = {r["subject_id"]: r for r in an.collect()}
     # display-name coalesce: "" name_cn falls back to name (:438)
     assert got[0]["name_cn"] == "subject 0"
@@ -160,8 +168,7 @@ def test_analytics_table_semantics(spark, fixture_dir):
 
 
 def test_category_summary_with_zero_guard(spark, fixture_dir):
-    pages = _read_pages(spark, fixture_dir)
-    items = items_from_pages(pages)
+    items = _fetch_items(spark, fixture_dir)
     totals = spark.createDataFrame(
         [("2_1", 5), ("2_2", 0), ("3_1", 1)], "cell_id: string, total_items: long"
     )
@@ -171,6 +178,76 @@ def test_category_summary_with_zero_guard(spark, fixture_dir):
     assert by_cell["2_1"]["completion_pct"] == 100.0
     assert by_cell["2_2"]["completion_pct"] == 0.0  # zero guard (:495)
     assert by_cell["2_2"]["fetched_items"] == 0
+
+
+# --- the Arrow flatten matches _flatten_item row for row
+
+
+def _ragged_pages():
+    """cell -> pages: ragged infobox values and keys, non-ASCII names,
+    a page whose scores and ranks are all null, and an empty page."""
+    ragged = _item(20, name="進撃の巨人", name_cn="进击的巨人")
+    ragged["subject"]["infobox"] = RAGGED_INFOBOX + [
+        {"key": "", "value": "dropped: empty key"},
+        {"key": None, "value": "dropped: null key"},
+        {"key": "話数", "value": 25},
+        {"key": "列表", "value": [{"v": "α"}, {"v": "  "}, 7, {"k": "no v"}]},
+        {"key": "空表", "value": []},
+        "not an entry",
+    ]
+    nulls = [_item(30 + i, name=f"ヌル {i}") for i in range(3)]
+    for it in nulls:
+        it["subject"]["score"] = None
+        it["subject"]["rank"] = None
+    nulls[1]["subject"]["infobox"] = []
+    nulls[2]["subject"]["tags"] = None
+    return {
+        "5_1": [
+            _page(3, 0, [ragged, _item(21, name="Ünïcödé ✓", name_cn="")]),
+            _page(3, 2, [_item(22, name_cn="中文名")]),
+        ],
+        "5_2": [_page(3, 0, nulls)],
+        "5_3": [_page(0, 0, [])],
+    }
+
+
+def _expected_rows(pages_by_cell):
+    return [
+        _flatten_item(cell_id, item)
+        for cell_id, pages in pages_by_cell.items()
+        for page in pages
+        for item in page["data"]
+    ]
+
+
+def test_items_batch_matches_flatten_item(spark):
+    schema = items_arrow_schema()
+    got = []
+    for cell_id, pages in _ragged_pages().items():
+        batch = items_batch(cell_id, pages, schema)
+        assert batch.schema == schema
+        got += batch.to_pylist()
+    for row in got:
+        row["infobox"] = dict(row["infobox"])  # Arrow map -> (key, value) pairs
+    want = _expected_rows(_ragged_pages())
+    assert got == want
+    assert {r["subject_id"]: r["infobox"] for r in want}[20]["列表"] == "α, 7"
+    assert all(r["score"] is None and r["rank"] is None for r in want if r["cell_id"] == "5_2")
+
+
+def test_fetch_items_matches_flatten_item(spark, tmp_path):
+    pages_by_cell = _ragged_pages()
+    for cell_id, pages in pages_by_cell.items():
+        for i, page in enumerate(pages):
+            (tmp_path / f"{cell_id}_page{i}.json").write_text(
+                json.dumps(page, ensure_ascii=False), encoding="utf-8"
+            )
+    cells = spark.createDataFrame([(c,) for c in pages_by_cell], "cell_id string")
+    items = fetch_items(cells, ReplayTransport(str(tmp_path)), page_limit=2)
+    got = sorted(
+        (r.asDict(recursive=True) for r in items.collect()), key=lambda r: r["subject_id"]
+    )
+    assert got == _expected_rows(pages_by_cell)
 
 
 def test_replay_transport_missing_file_is_empty(tmp_path):

@@ -7,6 +7,7 @@ at position 15). Run this BEFORE considering a round done:
 
     python tools/preflight.py            # full gate (~20 min)
     python tools/preflight.py --quick    # types + analysis + sf0.001 mirror
+                                         # + sync-cycle tests (~2 min)
 
 Stages:
 1. oracle output-type audit (audit_oracle_types) — catches the
@@ -15,7 +16,10 @@ Stages:
    AnalysisException-class crashes (the round-2 NTZ bug) in seconds;
 3. DuckDB mirror at sf0.001 (quick) / sf0.01 (full, what the driver
    runs), writing MIRROR_r{N}.log when --round N is given;
-4. (full only) pytest, then bench at $SPARK_GRAFT_SF_DIR — asserts
+4. (quick) the sync cycle's tests, tests/test_pipeline.py and
+   tests/test_sources.py — the reference job end to end, which the
+   mirror never runs (~1 min);
+   (full) all of pytest, then bench at $SPARK_GRAFT_SF_DIR — asserts
    rc 0 AND a parseable JSON line.
 """
 
@@ -85,6 +89,11 @@ def main() -> int:
             f.write("\n".join(lines) + "\n")
 
     if quick:
+        run(
+            "sync cycle tests",
+            [sys.executable, "-m", "pytest", "tests/test_pipeline.py",
+             "tests/test_sources.py", "-q"],
+        )
         print("preflight --quick PASSED")
         return 0
 
