@@ -11,7 +11,9 @@ data_loading_to_mysql_database.py:185-277):
 Physical notes for 100 TB: ``merge_snapshot`` applies the anti∪semi =
 source identity itself (Catalyst cannot prove it across a union of
 joins), so full sync is join-free and upsert is one anti join; the
-M1-M3 decomposition stays available via ``merge_parts``. AQE picks
+M1-M3 decomposition stays available via ``merge_parts``, and
+``key_diff`` tags all three in one full outer join for the sync stages,
+which need every class from a single pass. AQE picks
 broadcast when one snapshot is small, skew-join when the key is hot.
 For a mutable target the partition-scoped path
 (``merge_into_partitioned``) replaces only the hive partitions the
@@ -41,6 +43,26 @@ def merge_parts(source: DataFrame, target: DataFrame, key: str) -> dict[str, Dat
     }
 
 
+DIFF_OP = "_op"
+
+
+def key_diff(source: DataFrame, target: DataFrame, key: str) -> DataFrame:
+    """M1-M3 in ONE full outer join: ``source``'s columns plus
+    ``DIFF_OP``: 'insert' or 'update' on every source row, by whether
+    ``target`` holds its key, and 'delete' on every target row whose key
+    the source lacks, with the other columns NULL. Row for row the same
+    classes as :func:`merge_parts`, null keys excluded; only ``target``'s
+    key is read, grouped so a source row is tagged once."""
+    s = source.filter(F.col(key).isNotNull()).withColumn("__s", F.lit(True))
+    t = target.filter(F.col(key).isNotNull()).groupBy(key).agg(F.count(F.lit(1)).alias("__t"))
+    j = s.join(t, key, "full_outer")
+    deleted = F.col("__s").isNull()
+    copies = F.when(deleted, F.col("__t").cast("int")).otherwise(1)
+    op = F.when(deleted, "delete").when(F.col("__t").isNull(), "insert").otherwise("update")
+    j = j.select("*", F.explode(F.array_repeat(op, copies)).alias(DIFF_OP))
+    return j.select(*source.columns, DIFF_OP)
+
+
 def merge_snapshot(
     source: DataFrame,
     target: DataFrame,
@@ -55,16 +77,10 @@ def merge_snapshot(
     delete_absent=False → upsert-only (absent target rows survive).
     NA-key rows from the source pass through untouched (:223-227).
 
-    Plan note: inserts ∪ updates (M1 ∪ M3) PARTITIONS the source's
-    non-null-key rows — every source row lands in exactly one of the
-    anti/semi sides — so the net state simplifies algebraically:
-    full sync ≡ source, upsert ≡ source ∪ (target ∖ source-keys).
-    Catalyst cannot prove set identities across a union of joins, so
-    the collapse happens here: the full-sync path is join-free (zero
-    shuffles — the output streams straight off the source scan) and
-    the upsert path is ONE anti join instead of three sharing an
-    exchange. The M1-M3 decomposition itself stays available (and
-    individually oracle-checked) via :func:`merge_parts`.
+    Plan note: M1 ∪ M3 partitions the source's non-null-key rows, so
+    full sync ≡ source and upsert ≡ source ∪ (target ∖ source-keys).
+    Catalyst cannot prove that across a union of joins, so the collapse
+    happens here: full sync is join-free and upsert is ONE anti join.
     """
     if delete_absent:
         return source
@@ -99,12 +115,9 @@ def merge_scoped(
     not migrate between partitions — a key whose partition value
     changes would leave its old row live in an untouched partition.
 
-    The partition match is NULL-SAFE: a NULL partition value is one
-    partition like any other (hive's __HIVE_DEFAULT_PARTITION__), so a
-    source row with NULL ``partition_col`` touches the target's NULL
-    partition — a plain equi-semi-join would never match it, leaving
-    the target's NULL-partition rows out of both branches and losing
-    them at the write.
+    The partition match is NULL-SAFE: a NULL partition value (hive's
+    __HIVE_DEFAULT_PARTITION__) is touched like any other, where an
+    equi-semi-join would drop the target's NULL-partition rows.
     """
     touched = source.select(partition_col).distinct()
     cond = F.col(f"t.{partition_col}").eqNullSafe(F.col(f"p.{partition_col}"))
@@ -141,29 +154,20 @@ def merge_into_partitioned(
 
     Caveats:
     - ``key`` must not migrate across partitions (see merge_scoped).
-    - Every touched partition keeps ≥1 row by construction (source
-      rows always survive ``merge_snapshot``), so dynamic overwrite
-      replaces exactly the touched partitions — the stale-files case
-      (a partition losing ALL rows) cannot arise from this merge; a
-      full partition truncate is a layout operation (drop the
-      directory), out of scope here.
+    - Every touched partition keeps its source rows, so no partition
+      is left empty with stale files; truncating a whole partition is a
+      layout operation (drop the directory), out of scope here.
     """
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     target = spark.read.parquet(target_path)
-    # The WRITTEN frame must contain ONLY the touched partitions:
-    # dynamic overwrite replaces every partition present in the output,
-    # so unioning the untouched passthrough back in (merge_scoped's
-    # full logical state) would rewrite the whole table — exactly the
-    # I/O this operator exists to avoid.
-    # NULL partition values (__HIVE_DEFAULT_PARTITION__): a plain
-    # equi-semi-join never matches NULL, so the target's NULL-partition
-    # rows would fall out of `affected` while the source's NULL rows
-    # still land in the written output — dynamic overwrite would then
-    # replace that directory with the batch alone, silently dropping
-    # target rows. The null-safe condition fixes that but defeats DPP
-    # (the pruning rule wants EqualTo), so probe the DELTA (the small
-    # side — one tiny job) and only pay the null-safe plan when a NULL
-    # partition row is actually present.
+    # Write ONLY the touched partitions: dynamic overwrite replaces
+    # every partition in the output, so merge_scoped's untouched
+    # passthrough would rewrite the whole table.
+    # A NULL partition value (__HIVE_DEFAULT_PARTITION__) never matches
+    # an equi-semi-join, so that directory would be replaced by the
+    # batch alone, dropping target rows. The null-safe match defeats
+    # DPP (which wants EqualTo), so one tiny job probes the delta and
+    # the null-safe plan is paid only when a NULL partition is present.
     pcols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
     touched = source.select(*pcols).distinct()
     null_probe = F.lit(False)
@@ -213,12 +217,9 @@ def merge_scd2(
       dimension members; use ``merge_snapshot`` for delete semantics).
 
     Scale shape: ONE full-outer join of the open history against the
-    source, then a per-row CASE emits 1-2 output versions through an
-    ``explode`` — no semi/anti re-derivation, so each input is scanned
-    once (the earlier branch-per-transition formulation re-scanned the
-    open history four times and shuffled it three; on a 100 TB target
-    the scan count IS the job cost). Closed history unions back
-    untouched, never shuffled. Comparison is null-safe (``eqNullSafe``).
+    source, then a per-row CASE emits 1-2 versions through an
+    ``explode``, so each input is scanned once. Closed history unions
+    back untouched, never shuffled. Comparison is null-safe.
     """
     cur = history.filter(F.col(to_col).isNull())
     closed = history.filter(F.col(to_col).isNotNull())

@@ -17,10 +17,11 @@ see the same rows and no stage re-fetches the API:
 2. ``export_tables``— CSV (+ bounded Excel) presentation sinks (:467-548)
 3. ``load_warehouse`` / ``incremental_load``
                     — column-pruned warehouse write, then keyed snapshot
-                      merge (data_loading_to_mysql_database.py:99-277)
-4. ``notion_sync``  — readback diff → typed row-wise REST sink with
-                      insert / update / soft-delete
-                      (notion_data_ingestion.py:135-244, 294-402)
+                      merge: counts from one pass over ``key_diff``, one
+                      staged write (data_loading_to_mysql_database.py:99-277)
+4. ``notion_sync``  — the same ``key_diff`` against the readback → one
+                      typed row-wise REST pass posting inserts, updates
+                      and soft deletes (notion_data_ingestion.py:135-244, 294-402)
 
 Everything distributed stays a DataFrame; driver-side work is limited
 to planning metadata (probe totals) and run-report JSON.
@@ -30,13 +31,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .atomic import promote_dir, recover_dir, staging_path
-from .operators.merge import merge_parts, merge_snapshot
+from .operators.merge import DIFF_OP, key_diff
 from .sinks.files import write_csv, write_excel
 from .sinks.rest import write_rest
 from .sources.bangumi import (
@@ -136,8 +136,6 @@ def load_warehouse(tables: dict[str, DataFrame], warehouse_dir: str) -> dict[str
     """Stage 3a: column-pruned analytics + raw tables to the warehouse
     (parquet stands in for the JDBC target; the sink choice is a
     one-line swap to ``sinks.jdbc.write_jdbc``)."""
-    from pyspark.sql import Observation
-
     analytics = tables["analytics"]
     keep_dropping = [c for c in WAREHOUSE_DROPPED_COLS if c in analytics.columns]
     slim = analytics.drop(*keep_dropping)
@@ -166,33 +164,27 @@ def incremental_load(
     key: str = "subject_id",
 ) -> dict[str, int]:
     """Stage 3b: keyed snapshot merge into ``fact_view_logs_incremental``
-    (reference implement_incremental_load :185-277): initial-load branch
-    when the target is absent (M7), else anti/semi/union diff with
-    NA-key passthrough, delete-when-absent semantics."""
+    (reference implement_incremental_load :185-277). Full sync makes the
+    source, NA keys included, the new target: staged and promoted
+    (crash-recoverable, see atomic.py; an incomplete leftover is
+    replaced) and counted by ``observe`` on that write. With no complete
+    target the load is initial (M7), else one aggregate over ``key_diff``
+    counts the inserts, deletes and updates (NA keys in none)."""
     target_path = os.path.join(warehouse_dir, "fact_view_logs_incremental")
-    if not recover_dir(target_path):
-        if os.path.exists(target_path):  # incomplete, unrecoverable write
-            shutil.rmtree(target_path)
-        source.write.parquet(target_path)
-        n = spark.read.parquet(target_path).count()
-        return {"initial_load": n, "inserts": n, "deletes": 0, "updates": 0}
-
-    target = spark.read.parquet(target_path)
-    parts = merge_parts(source, target, key)
-    counts = {
-        "inserts": parts["inserts"].count(),
-        "deletes": parts["deletes"].count(),
-        "updates": parts["updates"].count(),
-    }
-    merged = merge_snapshot(source, target, key)
-    # the merge reads the target it replaces → stage then promote
-    # (rename-rename-delete, crash-recoverable: see atomic.py), never
-    # overwrite a path that is an input of the running plan
+    merge = recover_dir(target_path)
+    if merge:
+        op = F.col(DIFF_OP)
+        counts = key_diff(source, spark.read.parquet(target_path), key).agg(
+            *[F.count_if(op == o).alias(f"{o}s") for o in ("insert", "delete", "update")]
+        ).first().asDict()
+    obs = Observation("incremental_load")
     staging = staging_path(target_path)
-    merged.write.mode("overwrite").parquet(staging)
+    source.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(staging)
     promote_dir(staging, target_path)
-    counts["final_rows"] = spark.read.parquet(target_path).count()
-    return counts
+    n = obs.get["rows"]
+    if not merge:
+        return {"initial_load": n, "inserts": n, "deletes": 0, "updates": 0}
+    return {**counts, "final_rows": n}
 
 
 def notion_sync(
@@ -207,26 +199,20 @@ def notion_sync(
     rewrites all common rows, :250-262), and soft-delete sink rows
     absent from the source by posting ``is_active=false``
     (notion_data_ingestion.py:206-244). The shipped reference flow is
-    insert-only; the doc's designed behavior is this full upsert."""
+    insert-only; the doc's designed behavior is this full upsert.
+
+    One ``write_rest`` pass posts all three (every row is an insert when
+    there is no readback). NULL properties are omitted, so only a soft
+    delete carries ``is_active``, and nothing but it and the key."""
     props = {c: t for c, t in NOTION_PROPERTY_TYPES.items() if c in source.columns}
     if existing is None or not existing.columns:
-        metrics = write_rest(source, transport, props, key_col=key)
-        return {"inserted": metrics["success"], "updated": 0, "soft_deleted": 0,
-                "errors": metrics["errors"]}
-
-    parts = merge_parts(source, existing.select(key), key)
-    ins = write_rest(parts["inserts"], transport, props, key_col=key)
-    upd = write_rest(parts["updates"], transport, props, key_col=key)
-    gone = parts["deletes"].withColumn("is_active", F.lit(False))
-    dels = write_rest(
-        gone, transport, {key: "number", "is_active": "checkbox"}, key_col=key
-    )
-    return {
-        "inserted": ins["success"],
-        "updated": upd["success"],
-        "soft_deleted": dels["success"],
-        "errors": ins["errors"] + upd["errors"] + dels["errors"],
-    }
+        rows = source.withColumn(DIFF_OP, F.lit("insert"))
+    else:
+        rows = key_diff(source, existing, key)
+    rows = rows.withColumn("is_active", F.when(F.col(DIFF_OP) == "delete", False))
+    posted = write_rest(rows, transport, {**props, "is_active": "checkbox"}, key, op_col=DIFF_OP)
+    return {"inserted": posted.get("insert", 0), "updated": posted.get("update", 0),
+            "soft_deleted": posted.get("delete", 0), "errors": posted["errors"]}
 
 
 def run_report(path: str, **sections) -> str:

@@ -2227,15 +2227,23 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(0.1) * F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
+    # decimal per line: each line's exact profit has at most 4 decimals,
+    # so the decimal sum is exact, and a group whose exact profit ends
+    # on a half-cent rounds the same in both engines (double sums can
+    # land on either side of it)
+    profit = (
+        F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        - F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
+    ).cast("decimal(18,4)")
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"), F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(F.round(F.sum(profit), 2).alias("profit"), F.count("*").alias("n_lines"))
+        .agg(
+            F.round(F.sum(profit), 2).cast("double").alias("profit"),
+            F.count("*").alias("n_lines"),
+        )
         .orderBy("nation", "l_year")
     )
 
@@ -8715,8 +8723,9 @@ ORACLES: dict[str, str] = {
     """,
     "product_profit": """
         SELECT n_name AS nation, cast(year(l_shipdate) AS BIGINT) AS l_year,
-               round(sum(l_extendedprice * (1 - l_discount)
-                         - 0.1 * p_retailprice * l_quantity), 2) AS profit,
+               cast(round(sum(cast(l_extendedprice * (1 - l_discount)
+                                   - 0.1 * p_retailprice * l_quantity AS DECIMAL(18,4))), 2)
+                    AS DOUBLE) AS profit,
                count(*) AS n_lines
         FROM lineitem
         JOIN part ON l_partkey = p_partkey

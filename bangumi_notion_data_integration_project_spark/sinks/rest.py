@@ -7,10 +7,11 @@ soft-delete update (:206-244).
 
 Spark restatement: ``foreachPartition`` — each executor partition gets
 one transport (session reuse), posts its rows with the reference's
-backoff policy, and reports success/error via accumulators. Property
-formatting (P8) is a plain-Python helper mirroring format_property
-(:247-291), including its int-vs-float quirk ('.' in str) and the
-2000-char rich_text truncation (:258,268).
+backoff policy, and adds its per-operation success and error counts to
+one accumulator, so one pass serves inserts, updates and soft deletes.
+Property formatting (P8) is a plain-Python helper mirroring
+format_property (:247-291), including its int-vs-float quirk ('.' in
+str) and the 2000-char rich_text truncation (:258,268).
 
 Transports are injectable; tests use a file-backed fake — no network.
 """
@@ -21,8 +22,10 @@ import datetime as _dt
 import json
 import math
 import time
+from collections import Counter
 from typing import Any
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 
 MAX_RICH_TEXT = 2000  # notion_data_ingestion.py:258,268
@@ -100,47 +103,53 @@ class HttpPostTransport:
         raise RuntimeError(f"REST post failed after {MAX_RETRIES} retries: {last}")
 
 
+class _CountsParam(AccumulatorParam):
+    def zero(self, value):
+        return Counter()
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
+
+
 def write_rest(
     df: DataFrame,
     transport,
     property_types: dict[str, str],
+    key_col: str,
     *,
-    key_col: str | None = None,
+    op_col: str | None = None,
 ) -> dict[str, int]:
-    """Post every row through the transport; returns {'success': n,
-    'errors': n} from accumulators (reference counters :388-401)."""
+    """Post every row through the transport in one ``foreachPartition``
+    (reference counters :388-401). Each payload carries ``key_col``'s
+    value as ``__key``. Returns the successful posts per operation, the
+    row's ``op_col`` value (every row counts as 'success' without
+    ``op_col``), plus 'errors'."""
     sc = df.sparkSession.sparkContext
-    ok_acc = sc.accumulator(0)
-    err_acc = sc.accumulator(0)
+    tally = sc.accumulator(Counter(), _CountsParam())
     cols = list(property_types.items())
 
     def post_partition(rows) -> None:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        nonlocal_ok = 0
-        nonlocal_err = 0
+        counts = Counter()
         for row in rows:
-            # formatting failures (non-numeric string in a 'number'
-            # column, unsupported property type) count as row errors,
-            # matching the reference's tolerate-and-continue semantics
-            # (notion_data_ingestion.py:247-291, 388-401) — one bad row
-            # must not kill the whole partition task
+            # a formatting failure is a row error, not a failed task:
+            # the reference tolerates and continues (:247-291, 388-401)
             try:
                 d = row.asDict()
-                payload = {"properties": {}}
-                if key_col is not None:
-                    payload["__key"] = d.get(key_col)
+                payload = {"properties": {}, "__key": d.get(key_col)}
                 for col, ptype in cols:
                     formatted = format_property(d.get(col), ptype)
                     if formatted is not None:
                         payload["properties"][col] = formatted
                 transport.post_row(pid, payload)
-                nonlocal_ok += 1
+                counts[d[op_col] if op_col else "success"] += 1
             except Exception:  # noqa: BLE001
-                nonlocal_err += 1
-        ok_acc.add(nonlocal_ok)
-        err_acc.add(nonlocal_err)
+                counts["errors"] += 1
+        tally.add(counts)
 
     df.foreachPartition(post_partition)
-    return {"success": ok_acc.value, "errors": err_acc.value}
+    base = {"errors": 0} if op_col else {"success": 0, "errors": 0}
+    return {**base, **tally.value}

@@ -9,6 +9,8 @@ import re
 from pyspark.sql import functions as F
 
 from bangumi_notion_data_integration_project_spark.operators.merge import (
+    DIFF_OP,
+    key_diff,
     merge_parts,
     merge_snapshot,
 )
@@ -28,6 +30,26 @@ def test_merge_parts_classification(spark):
     assert [r["k"] for r in parts["deletes"].collect()] == [3]
     assert [r["v"] for r in parts["updates"].collect()] == ["s2"]  # source wins
     assert [r["v"] for r in parts["source_na"].collect()] == ["sna"]
+
+
+def test_key_diff_tags_rows_as_merge_parts_splits_them(spark):
+    # duplicate keys on both sides and null keys on both sides
+    source = _df(spark, [(1, "s1"), (2, "s2"), (2, "s2b"), (4, "s4"), (None, "sna")])
+    target = _df(spark, [(2, "t2"), (2, "t2b"), (3, "t3"), (3, "t3b"), (5, "t5"), (None, "tna")])
+    parts = merge_parts(source, target, "k")
+    want = sorted(
+        (r["k"], r["v"], op)
+        for op, part in (("insert", "inserts"), ("update", "updates"))
+        for r in parts[part].collect()
+    ) + sorted((r["k"], None, "delete") for r in parts["deletes"].collect())
+    diff = key_diff(source, target, "k")
+    assert diff.columns == ["k", "v", DIFF_OP]
+    rows = [(r["k"], r["v"], r[DIFF_OP]) for r in diff.collect()]
+    got = sorted(r for r in rows if r[2] != "delete") + sorted(r for r in rows if r[2] == "delete")
+    assert got == want
+    assert got == [(1, "s1", "insert"), (2, "s2", "update"), (2, "s2b", "update"),
+                   (4, "s4", "insert"), (3, None, "delete"), (3, None, "delete"),
+                   (5, None, "delete")]
 
 
 def test_full_sync_equals_source_plus_na(spark):

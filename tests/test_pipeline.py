@@ -155,6 +155,99 @@ def test_notion_sync_insert_update_softdelete(spark, tables, tmp_path):
     assert len(titled) == 5  # 3 inserts + 2 updates carry full properties
 
 
+def _posted(out_dir):
+    posted = []
+    for p in glob.glob(f"{out_dir}/part-*.jsonl"):
+        with open(p, encoding="utf-8") as f:
+            posted += [json.loads(line) for line in f]
+    return posted
+
+
+def test_notion_sync_counts_only_the_posts_that_got_through(spark, tables, tmp_path, monkeypatch):
+    calls = []
+    write_rest = pipeline.write_rest
+    monkeypatch.setattr(
+        pipeline, "write_rest", lambda *a, **kw: calls.append(1) or write_rest(*a, **kw)
+    )
+    existing = spark.createDataFrame([(1,), (2,), (777,), (778,)], "subject_id: long")
+    # 3 is an insert, 1 an update, 777 a stale key
+    out = tmp_path / "readback"
+    out.mkdir()
+    transport = FileTransport(str(out), fail_on=frozenset({3, 1, 777}))
+    metrics = pipeline.notion_sync(tables["analytics"], existing, transport)
+    assert metrics == {"inserted": 2, "updated": 1, "soft_deleted": 1, "errors": 3}
+    posted = _posted(out)
+    assert sorted(p["__key"] for p in posted) == [2, 10, 11, 778]
+    deletes = [p for p in posted if "is_active" in p["properties"]]
+    assert deletes == [{
+        "properties": {"subject_id": {"number": 778}, "is_active": {"checkbox": False}},
+        "__key": 778,
+    }]
+
+    # no readback: every row is an insert
+    out = tmp_path / "fresh"
+    out.mkdir()
+    transport = FileTransport(str(out), fail_on=frozenset({10}))
+    metrics = pipeline.notion_sync(tables["analytics"], None, transport)
+    assert metrics == {"inserted": 4, "updated": 0, "soft_deleted": 0, "errors": 1}
+    posted = _posted(out)
+    assert sorted(p["__key"] for p in posted) == [1, 2, 3, 11]
+    assert not any("is_active" in p["properties"] for p in posted)
+    assert len(calls) == 2  # one REST pass per sync
+
+
+def _with_null_key(analytics):
+    null_key = F.lit(None).cast(analytics.schema["subject_id"].dataType)
+    return analytics.unionByName(
+        analytics.filter(F.col("subject_id") == 1).withColumn("subject_id", null_key)
+    )
+
+
+def test_null_key_rows_in_notion_sync(spark, tables, tmp_path):
+    source = _with_null_key(tables["analytics"])
+    out = tmp_path / "fresh"
+    out.mkdir()
+    metrics = pipeline.notion_sync(source, None, FileTransport(str(out)))
+    assert metrics == {"inserted": 6, "updated": 0, "soft_deleted": 0, "errors": 0}
+    nulls = [p for p in _posted(out) if p["__key"] is None]
+    assert len(nulls) == 1 and "subject_id" not in nulls[0]["properties"]
+    assert nulls[0]["properties"]["name_cn"] == {"title": [{"text": {"content": "中文一"}}]}
+
+    # against a readback the null-key row is neither posted nor counted
+    out = tmp_path / "readback"
+    out.mkdir()
+    existing = spark.createDataFrame([(1,), (2,), (777,), (None,)], "subject_id: long")
+    metrics = pipeline.notion_sync(source, existing, FileTransport(str(out)))
+    assert metrics == {"inserted": 3, "updated": 2, "soft_deleted": 1, "errors": 0}
+    assert sorted(p["__key"] for p in _posted(out)) == [1, 2, 3, 10, 11, 777]
+
+
+def test_null_key_rows_in_incremental_load(spark, tables, tmp_path):
+    wh = str(tmp_path / "wh")
+    assert pipeline.incremental_load(spark, tables["analytics"], wh)["initial_load"] == 5
+    counts = pipeline.incremental_load(spark, _with_null_key(tables["analytics"]), wh)
+    assert counts == {"inserts": 0, "deletes": 0, "updates": 5, "final_rows": 6}
+    written = spark.read.parquet(os.path.join(wh, "fact_view_logs_incremental"))
+    assert sorted(r["subject_id"] for r in written.collect() if r["subject_id"] is not None) == [
+        1, 2, 3, 10, 11
+    ]
+    assert written.filter(F.col("subject_id").isNull()).count() == 1
+
+
+def test_initial_load_replaces_a_crash_leftover(spark, tables, tmp_path):
+    # parquet files but no _SUCCESS, and no .old/.tmp sibling to recover
+    wh = tmp_path / "wh"
+    target = wh / "fact_view_logs_incremental"
+    tables["analytics"].limit(2).write.parquet(str(target))
+    os.remove(target / "_SUCCESS")
+    counts = pipeline.incremental_load(spark, tables["analytics"], str(wh))
+    assert counts == {"initial_load": 5, "inserts": 5, "deletes": 0, "updates": 0}
+    assert (target / "_SUCCESS").exists()
+    assert sorted(os.listdir(wh)) == ["fact_view_logs_incremental"]
+    ids = sorted(r["subject_id"] for r in spark.read.parquet(str(target)).collect())
+    assert ids == [1, 2, 3, 10, 11]
+
+
 @pytest.mark.parametrize("extra_cells", [0, 1])
 def test_extract_runs_one_job_of_one_task_per_core(spark, tmp_path, extra_cells):
     """One job, its tasks sized to the cores: fewer non-empty cells

@@ -7,7 +7,7 @@ at position 15). Run this BEFORE considering a round done:
 
     python tools/preflight.py            # full gate (~20 min)
     python tools/preflight.py --quick    # types + analysis + sf0.001 mirror
-                                         # + sync-cycle tests (~2 min)
+                                         # + sync-cycle tests (~9 min, 4 cores)
 
 Stages:
 1. oracle output-type audit (audit_oracle_types) — catches the
