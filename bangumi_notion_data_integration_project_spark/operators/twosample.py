@@ -14,6 +14,17 @@ quantity is computed on the DISTINCT-VALUE aggregate — raw rows
 reduce map-side in a (group, value, side) count first, so the ordered
 windows only ever see O(distinct values) rows at any fact volume.
 
+One counts function, one table: ``_sided_counts`` turns a flagged frame
+(1 = reference, 2 = current, NULL = neither) into the
+``(group..., __v | __cat, __c1, __c2)`` counts frame, and
+``_FROM_COUNTS`` maps each two-sample kind to its formula tail.
+``two_sample(kind, df, value_col, side)`` is the one-scan entry
+point; each named two-input operator is that call on ``ref ∪ cur``
+with a literal side, and the streaming twins store the same frame
+and read it back through ``streaming.read_streaming_two_sample``.
+The z-test (four counts, not value counts) keeps its own body,
+``two_proportion_ztest_split``.
+
 Exactness: average ranks are kept integer by doubling (2·avgrank =
 2·prior_total + cnt + 1), the rank sum / U statistic / tie terms are
 exact integer sums, the KS numerator max|cum₁·n₂ − cum₂·n₁| is an
@@ -29,43 +40,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _DEC = "decimal(38,0)"
-
-
-def _sided_counts(
-    ref: DataFrame,
-    cur: DataFrame,
-    value_col: str,
-    groups: "list[str]",
-    op_name: str,
-) -> DataFrame:
-    """``(group..., __v, __c1, __c2)`` distinct combined values with
-    per-side counts — the shared map-side reduction both tests rank
-    over. NULL values and NULL group keys raise (the psi convention)."""
-    from .drift import _checked_keys, _checked_long
-
-    if groups:
-        ref = _checked_keys(ref, groups, op_name=op_name)
-        cur = _checked_keys(cur, groups, op_name=op_name)
-    a = ref.select(
-        *groups,
-        _checked_long(F.col(value_col), "reference", op_name).alias("__v"),
-    ).withColumn("__s", F.lit(1))
-    b = cur.select(
-        *groups,
-        _checked_long(F.col(value_col), "input", op_name).alias("__v"),
-    ).withColumn("__s", F.lit(2))
-    return (
-        a.unionByName(b)
-        .groupBy(*groups, "__v")
-        .agg(
-            F.sum(F.when(F.col("__s") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("__c1"),
-            F.sum(F.when(F.col("__s") == 2, 1).otherwise(0))
-            .cast("long")
-            .alias("__c2"),
-        )
-    )
 
 
 def _checked_side(side: Column, op_name: str) -> Column:
@@ -86,44 +60,69 @@ def _checked_side(side: Column, op_name: str) -> Column:
     )
 
 
-def _sided_counts_split(
+def _sided_counts(
     df: DataFrame,
     value_col: str,
     side: Column,
     groups: "list[str]",
     op_name: str,
+    *,
+    categorical: bool = False,
 ) -> DataFrame:
-    """One-scan twin of :func:`_sided_counts` (guide §6/§2.3: the era
-    split ``ref = src.filter(p)`` / ``cur = src.filter(q)`` scans the
-    pruned source once PER SIDE; a side-flag conditional aggregate
-    reads it once). ``side`` is a Column over ``df`` evaluating 1
-    (reference era), 2 (current era) or NULL (neither era — dropped).
-    Produces the identical ``(group..., __v, __c1, __c2)`` frame, so
-    every ``*_from_counts`` formula tail — and therefore every
-    statistic — is bit-identical to the two-input form (pinned by
-    tests/test_twosample.py::test_split_variants_match_two_input)."""
+    """``(group..., __v, __c1, __c2)`` distinct values with per-side
+    counts — the one map-side reduction every two-sample tail reads
+    (``__cat`` instead of ``__v`` when ``categorical``: the category
+    key is checked non-NULL like a group key, never cast). ``side`` is
+    a Column over ``df`` evaluating 1 (reference), 2 (current) or NULL
+    (neither era — dropped), so one scan of the un-split source feeds
+    both sides; the two-input operators pass
+    ``ref ∪ cur`` with a literal flag, and the streaming twins build
+    their frozen reference (literal 1) and each batch delta (literal
+    2) here too. NULL values and NULL group keys raise (the psi
+    convention)."""
     from .drift import _checked_keys, _checked_long
 
     d = df.withColumn("__s", _checked_side(side, op_name)).filter(
         F.col("__s").isNotNull()
     )
-    if groups:
-        d = _checked_keys(d, groups, op_name=op_name)
-    return (
-        d.select(
+    if categorical:
+        key = "__cat"
+        d = _checked_keys(
+            d.select(*groups, F.col(value_col).alias(key), "__s"),
+            [*groups, key],
+            op_name=op_name,
+        )
+    else:
+        key = "__v"
+        if groups:
+            d = _checked_keys(d, groups, op_name=op_name)
+        d = d.select(
             *groups,
-            _checked_long(F.col(value_col), "input", op_name).alias("__v"),
+            _checked_long(F.col(value_col), "input", op_name).alias(key),
             "__s",
         )
-        .groupBy(*groups, "__v")
-        .agg(
-            F.sum(F.when(F.col("__s") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("__c1"),
-            F.sum(F.when(F.col("__s") == 2, 1).otherwise(0))
-            .cast("long")
-            .alias("__c2"),
-        )
+    return d.groupBy(*groups, key).agg(
+        F.sum(F.when(F.col("__s") == 1, 1).otherwise(0))
+        .cast("long")
+        .alias("__c1"),
+        F.sum(F.when(F.col("__s") == 2, 1).otherwise(0))
+        .cast("long")
+        .alias("__c2"),
+    )
+
+
+def _flagged(
+    ref: DataFrame,
+    cur: DataFrame,
+    value_col: str,
+    group_cols: "list[str] | None",
+) -> DataFrame:
+    """``ref ∪ cur`` projected to ``(group..., value)`` with the literal
+    side flag ``__side`` (1 = ref, 2 = cur) — how every two-input
+    operator reaches its one-scan form."""
+    cols = [*(group_cols or []), value_col]
+    return ref.select(*cols, F.lit(1).alias("__side")).unionByName(
+        cur.select(*cols, F.lit(2).alias("__side"))
     )
 
 
@@ -162,17 +161,20 @@ def mann_whitney_u(
     overflow DECIMAL(38,0) near 4·10⁷ rows; the ols_fit2 det
     precedent). The LONG output cast of tie_term fails loud under ANSI
     if a single value repeats > ~2.1M times in one group."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "mann_whitney_u")
-    return _mwu_from_counts(vc, groups)
+    return two_sample(
+        "mwu",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _mwu_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared MWU formula tail over a ``(group..., __v, __c1, __c2)``
-    sided-counts frame. ONE implementation serves the batch operator
-    AND the streaming twin (``streaming.start_streaming_mwu`` stores
-    exactly this frame as its state), so the statistic can never
-    diverge between them — the ``_psi_from_base`` rule."""
+    """MWU formula tail over a ``(group..., __v, __c1, __c2)``
+    sided-counts frame (``_FROM_COUNTS["mwu"]``): the batch operators
+    and the streaming reader share it, so their statistics can never
+    diverge — the ``_psi_from_base`` rule."""
     from .stats import normal_p_two_sided
 
     if groups:
@@ -281,9 +283,13 @@ def ks_two_sample(
     ``(group..., n_ref, n_cur, d_stat, location, p_approx)``; a group
     present in only one input reports NULL stats with its counts (the
     MWU/psi one-sided convention, never a 0/0 NaN)."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "ks_two_sample")
-    return _ks_from_counts(vc, groups)
+    return two_sample(
+        "ks",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _ecdf_base(
@@ -335,11 +341,8 @@ def _ecdf_base(
 
 
 def _ks_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared KS formula tail over a ``(group..., __v, __c1, __c2)``
-    sided-counts frame. ONE implementation serves the batch operator
-    AND the streaming twin (``streaming.start_streaming_ks`` stores
-    exactly this frame as its state), so the statistic can never
-    diverge between them — the ``_mwu_from_counts`` rule."""
+    """KS formula tail over a sided-counts frame
+    (``_FROM_COUNTS["ks"]``)."""
     based, _ = _ecdf_base(vc, groups)
     num = F.abs(
         F.col("__m1").cast(_DEC) * F.col("n_cur")
@@ -411,10 +414,10 @@ def two_proportion_ztest(
         z = (p₁ − p₂ ∓ cc) / sqrt(p̂(1−p̂)(1/n₁+1/n₂)),  cc = ½(1/n₁+1/n₂)
 
     Everything before z is four exact integer counts from ONE
-    map-side-combinable aggregate per side (the only shuffle carries
-    one row per group); z is one double expression of those integers
-    and the p-value rides the shared A&S polynomial (round-at-≤9dp
-    oracle contract). ``success_col`` must be 0/1 — other values
+    map-side-combinable conditional aggregate over ``ref ∪ cur`` (the
+    only shuffle carries one row per group); z is one double
+    expression of those integers and the p-value rides the shared A&S
+    polynomial (round-at-≤9dp oracle contract). ``success_col`` must be 0/1 — other values
     raise (fail-loud, the NULL-value convention: a 2 silently summed
     into successes would corrupt the rate). Returns one row per
     group: ``(group..., n_ref, s_ref, n_cur, s_cur, rate_ref,
@@ -422,57 +425,17 @@ def two_proportion_ztest(
     rates (p̂ ∈ {0,1} ⇒ zero variance) report NULL z/p under exact
     integer guards, while each rate stays populated whenever its own
     side has data."""
-    groups = list(group_cols or [])
-
-    def counted(df: DataFrame, tag: str, op: str) -> DataFrame:
-        if groups:
-            from .drift import _checked_keys
-
-            df = _checked_keys(df, groups, op_name=op)
-        s = F.col(success_col)
-        # validate the RAW column, not its long-cast: 0.9 must raise,
-        # not truncate to a counted failure, and a value whose cast is
-        # NULL must not slip through as a NULL the sum silently skips
-        # while count(*) still counts the row (the review find)
-        checked = F.when(
-            s.isNull() | ~s.isin(0, 1),
-            F.raise_error(
-                F.lit(
-                    f"{op}: {success_col} must be 0/1 in the {tag}"
-                    " input — cast or filter explicitly"
-                )
-            ),
-        ).otherwise(s.cast("long"))
-        return df.select(*groups, checked.alias("__s")).groupBy(
-            *groups
-        ).agg(
-            F.count("*").cast("long").alias(f"n_{tag}"),
-            F.sum("__s").cast("long").alias(f"s_{tag}"),
-        )
-
-    op = "two_proportion_ztest"
-    a = counted(ref, "ref", op)
-    b = counted(cur, "cur", op)
-    if groups:
-        base = a.join(b, groups, "full")
-    else:
-        base = a.crossJoin(F.broadcast(b))
-    base = base.select(
-        *groups,
-        F.coalesce("n_ref", F.lit(0)).cast("long").alias("n_ref"),
-        F.coalesce("s_ref", F.lit(0)).cast("long").alias("s_ref"),
-        F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),
-        F.coalesce("s_cur", F.lit(0)).cast("long").alias("s_cur"),
+    return two_proportion_ztest_split(
+        _flagged(ref, cur, success_col, group_cols),
+        success_col,
+        F.col("__side"),
+        group_cols=group_cols,
     )
-    return _ztest_from_base(base, groups)
 
 
 def _ztest_from_base(base: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared z-test formula tail over a ``(group..., n_ref, s_ref,
-    n_cur, s_cur)`` four-count frame — serves the two-input operator
-    AND :func:`two_proportion_ztest_split` (the ``_mwu_from_counts``
-    rule), so the statistic can never diverge between the two input
-    shapes."""
+    """Z-test formula tail over a ``(group..., n_ref, s_ref, n_cur,
+    s_cur)`` four-count frame."""
     from .stats import normal_p_two_sided
 
     n1d = F.col("n_ref").cast("double")
@@ -542,17 +505,18 @@ def wasserstein_1(
     report NULL w1 with their counts (the psi asymmetry convention);
     both-empty ungrouped inputs report (0, 0, NULL). NULL values
     raise (fail-loud)."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "wasserstein_1")
-    return _w1_from_counts(vc, groups)
+    return two_sample(
+        "w1",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _w1_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared W1 formula tail over a sided-counts frame — serves the
-    batch operator AND ``streaming.read_streaming_w1`` (the
-    ``_mwu_from_counts`` rule: the drift monitors' stored sided-counts
-    state is ONE table that serves every member of the two-sample
-    family)."""
+    """W1 formula tail over a sided-counts frame
+    (``_FROM_COUNTS["w1"]``)."""
     based, _ = _ecdf_base(vc, groups, lead=True)
     # the last distinct value has no successor — its ECDF gap spans no
     # axis length, so the lead-NULL term is correctly zero. The gap is
@@ -629,14 +593,18 @@ def cramer_von_mises(
     significance, or let the MWU/KS p-values make the call; this
     operator contributes the L2 magnitude reading). One-sided groups
     report NULL stats with counts; NULL values raise."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "cramer_von_mises")
-    return _cvm_from_counts(vc, groups)
+    return two_sample(
+        "cvm",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _cvm_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared CvM formula tail over a sided-counts frame — serves the
-    batch operator AND ``streaming.read_streaming_cvm``."""
+    """CvM formula tail over a sided-counts frame
+    (``_FROM_COUNTS["cvm"]``)."""
     based, _ = _ecdf_base(vc, groups)
     # per-term normalized contribution in DOUBLE of the exact DECIMAL
     # ECDF difference, quantized at 1e-12 and integer-summed: order-
@@ -732,14 +700,18 @@ def mood_median_test(
     (nobody above the median, or everybody) zero the denominator —
     NULL chi2/p under an exact integer guard; one-sided groups report
     NULL stats with counts; NULL values raise."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "mood_median_test")
-    return _mood_from_counts(vc, groups)
+    return two_sample(
+        "mood",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _mood_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared Mood formula tail over a sided-counts frame — serves the
-    batch operator AND ``streaming.read_streaming_mood``."""
+    """Mood formula tail over a sided-counts frame
+    (``_FROM_COUNTS["mood"]``)."""
     from .stats import normal_p_two_sided
 
     based, totals = _ecdf_base(vc, groups)
@@ -861,16 +833,19 @@ def brunner_munzel(
     rounded doubles can manufacture ±∞) report NULL bm_stat/p with
     counts and p̂. NULL values raise. Streaming: served batch-exact
     from any stored sided-counts state by
-    ``streaming.read_streaming_bm`` — one fold, SEVEN verdicts."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "brunner_munzel")
-    return _bm_from_counts(vc, groups)
+    ``streaming.read_streaming_two_sample(spark, dir, "bm")``."""
+    return two_sample(
+        "bm",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _bm_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared Brunner-Munzel formula tail over a sided-counts frame —
-    serves the batch operator AND ``streaming.read_streaming_bm``
-    (the ``_mwu_from_counts`` rule)."""
+    """Brunner-Munzel formula tail over a sided-counts frame
+    (``_FROM_COUNTS["bm"]``)."""
     from .stats import normal_p_two_sided
 
     based, _ = _ecdf_base(vc, groups)
@@ -1103,16 +1078,18 @@ def ansari_bradley(
     reports NULL z/p, NULL values raise (fail-loud). No continuity
     correction (the scipy.stats.ansari normal-approximation
     convention)."""
-    groups = list(group_cols or [])
-    vc = _sided_counts(ref, cur, value_col, groups, "ansari_bradley")
-    return _ab_from_counts(vc, groups)
+    return two_sample(
+        "ab",
+        _flagged(ref, cur, value_col, group_cols),
+        value_col,
+        F.col("__side"),
+        group_cols=group_cols,
+    )
 
 
 def _ab_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared Ansari-Bradley formula tail over a sided-counts frame —
-    serves the batch operator AND ``streaming.read_streaming_ab`` (the
-    ``_mwu_from_counts`` rule: one stored state, now SIX batch-exact
-    verdicts)."""
+    """Ansari-Bradley formula tail over a sided-counts frame
+    (``_FROM_COUNTS["ab"]``)."""
     from .stats import normal_p_two_sided
 
     based, _ = _ecdf_base(vc, groups)
@@ -1720,9 +1697,9 @@ def chi2_homogeneity(
         p = 2(1 − Φ(√χ²)) — the Mood path — because WH carries ~5%
         relative error near p = 0.05 at one degree of freedom
 
-    Scale shape: one map-side count aggregate per side over the
+    Scale shape: one map-side conditional count aggregate over the
     category key (O(categories) rows — the z-test cost shape, never
-    the fact volume), a keyed merge, and a scalar fold. d_c is exact
+    the fact volume) and a scalar fold. d_c is exact
     DECIMAL(38,0); each category's d²/(n₁n₂t) contribution is one
     double expression of exact integers quantized at 1e-9 and
     integer-summed (the KW tn trick — order-free, engine-identical).
@@ -1736,39 +1713,19 @@ def chi2_homogeneity(
     categories reports NULL chi2/z/p with its counts. NULL
     categories raise (fail-loud — a NULL silently pooled into its
     own category would hide an encoding bug)."""
-    from .drift import _checked_keys
-    from .stats import normal_p_two_sided
-
-    groups = list(group_cols or [])
-
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        d = _checked_keys(
-            df.select(*groups, F.col(cat_col).alias("__cat")),
-            [*groups, "__cat"],
-            op_name="chi2_homogeneity",
-        )
-        return d.groupBy(*groups, "__cat").agg(
-            F.count("*").cast("long").alias(tag)
-        )
-    a = side(ref, "__c1")
-    b = side(cur, "__c2")
-    vc = (
-        a.join(b, [*groups, "__cat"], "full")
-        .select(
-            *groups,
-            "__cat",
-            F.coalesce(F.col("__c1"), F.lit(0)).cast("long").alias("__c1"),
-            F.coalesce(F.col("__c2"), F.lit(0)).cast("long").alias("__c2"),
-        )
+    return two_sample(
+        "chi2",
+        _flagged(ref, cur, cat_col, group_cols),
+        cat_col,
+        F.col("__side"),
+        group_cols=group_cols,
     )
-    return _chi2_from_counts(vc, groups)
 
 
 def _chi2_from_counts(vc: DataFrame, groups: "list[str]") -> DataFrame:
-    """Shared chi-square homogeneity formula tail over a ``(group...,
-    __cat, __c1, __c2)`` category sided-counts frame — serves the
-    batch operator AND ``streaming.read_streaming_chi2`` (the
-    ``_mwu_from_counts`` rule applied to the categorical rung)."""
+    """Chi-square homogeneity formula tail over a ``(group..., __cat,
+    __c1, __c2)`` category sided-counts frame
+    (``_FROM_COUNTS["chi2"]``)."""
     from .stats import normal_p_two_sided
 
     d_dec = (
@@ -2002,96 +1959,51 @@ def _medk_from_counts(
     return out.orderBy(*outer) if outer else out
 
 
-# ---------------------------------------------------------------------------
-# One-scan era-split variants (optimization r14, guide §6/§2.3): the
-# registered drift queries split one pruned source into ref/cur with
-# two disjoint filters, so the SAME parquet scan (or join spine) ran
-# once per side. Each *_split twin takes the un-split frame plus a
-# side flag (1 = reference, 2 = current, NULL = neither era → row
-# dropped) and feeds the IDENTICAL sided-counts frame into the shared
-# *_from_counts formula tail — results are bit-identical to the
-# two-input form (pinned by tests/test_twosample.py), the plan reads
-# the source once.
-# ---------------------------------------------------------------------------
+# each two-sample test's kind → (operator name for fail-loud errors,
+# key column of its sided-counts frame, formula tail over that frame)
+_FROM_COUNTS = {
+    "mwu": ("mann_whitney_u", "__v", _mwu_from_counts),
+    "ks": ("ks_two_sample", "__v", _ks_from_counts),
+    "w1": ("wasserstein_1", "__v", _w1_from_counts),
+    "cvm": ("cramer_von_mises", "__v", _cvm_from_counts),
+    "mood": ("mood_median_test", "__v", _mood_from_counts),
+    "ab": ("ansari_bradley", "__v", _ab_from_counts),
+    "bm": ("brunner_munzel", "__v", _bm_from_counts),
+    "chi2": ("chi2_homogeneity", "__cat", _chi2_from_counts),
+}
 
 
-def mann_whitney_u_split(
+def _from_counts(kind: str, caller: str):
+    """``(op_name, key, tail)`` for ``kind``; an unknown kind raises."""
+    if kind not in _FROM_COUNTS:
+        raise ValueError(
+            f"{caller}: unknown kind {kind!r} — expected one of"
+            f" {sorted(_FROM_COUNTS)}"
+        )
+    return _FROM_COUNTS[kind]
+
+
+def two_sample(
+    kind: str,
     df: DataFrame,
     value_col: str,
     side: Column,
     *,
     group_cols: "list[str] | None" = None,
 ) -> DataFrame:
-    """One-scan twin of :func:`mann_whitney_u` — see the module-level
-    split note; statistics and degenerate conventions are identical."""
+    """One-scan form of every two-sample test in ``_FROM_COUNTS``:
+    ``side`` flags each row of the un-split ``df`` 1 (reference), 2
+    (current) or NULL (neither era — dropped), so the source is read
+    once rather than once per era filter. ``kind`` picks the test
+    (``"chi2"`` reads ``value_col`` as a category); the output,
+    statistics and degenerate conventions are the named two-input
+    operator's, which is this call on ``ref ∪ cur``."""
+    op_name, key, tail = _from_counts(kind, "two_sample")
     groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "mann_whitney_u")
-    return _mwu_from_counts(vc, groups)
-
-
-def ks_two_sample_split(
-    df: DataFrame,
-    value_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`ks_two_sample`."""
-    groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "ks_two_sample")
-    return _ks_from_counts(vc, groups)
-
-
-def wasserstein_1_split(
-    df: DataFrame,
-    value_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`wasserstein_1`."""
-    groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "wasserstein_1")
-    return _w1_from_counts(vc, groups)
-
-
-def cramer_von_mises_split(
-    df: DataFrame,
-    value_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`cramer_von_mises`."""
-    groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "cramer_von_mises")
-    return _cvm_from_counts(vc, groups)
-
-
-def mood_median_test_split(
-    df: DataFrame,
-    value_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`mood_median_test`."""
-    groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "mood_median_test")
-    return _mood_from_counts(vc, groups)
-
-
-def ansari_bradley_split(
-    df: DataFrame,
-    value_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`ansari_bradley`."""
-    groups = list(group_cols or [])
-    vc = _sided_counts_split(df, value_col, side, groups, "ansari_bradley")
-    return _ab_from_counts(vc, groups)
+    vc = _sided_counts(
+        df, value_col, side, groups, op_name, categorical=key == "__cat"
+    )
+    return tail(vc, groups)
 
 
 def two_proportion_ztest_split(
@@ -2101,12 +2013,12 @@ def two_proportion_ztest_split(
     *,
     group_cols: "list[str] | None" = None,
 ) -> DataFrame:
-    """One-scan twin of :func:`two_proportion_ztest`: the four counts
-    come from ONE conditional aggregate over the flagged frame instead
-    of one aggregate per side (for the segment-grain query the side
-    inputs are a lineitem⋈orders join spine — the split form runs that
-    join once). Shares :func:`_ztest_from_base`, so the statistic and
-    every degenerate convention are identical."""
+    """One-scan form of :func:`two_proportion_ztest`, and its only
+    body (the two-input form calls it on ``ref ∪ cur``): the four
+    counts come from ONE conditional aggregate over the flagged frame,
+    so a lineitem⋈orders join spine feeding both eras runs once. The
+    z-test base is four counts per group, not value counts, so it is
+    not a ``two_sample`` kind."""
     groups = list(group_cols or [])
     op = "two_proportion_ztest"
     d = df.withColumn("__sd", _checked_side(side, op)).filter(
@@ -2151,36 +2063,32 @@ def two_proportion_ztest_split(
     return _ztest_from_base(base, groups)
 
 
-def chi2_homogeneity_split(
-    df: DataFrame,
-    cat_col: str,
-    side: Column,
-    *,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """One-scan twin of :func:`chi2_homogeneity`: one conditional
-    count aggregate over the flagged frame replaces the per-side
-    aggregate + full-outer merge (a category present in only one era
-    gets the same (c, 0) row the outer join produced). Shares
-    :func:`_chi2_from_counts`."""
-    groups = list(group_cols or [])
-    op = "chi2_homogeneity"
-    from .drift import _checked_keys
-
-    d = df.withColumn("__sd", _checked_side(side, op)).filter(
-        F.col("__sd").isNotNull()
+def _mix_shares(vc: DataFrame, groups: "list[str]") -> DataFrame:
+    """Per-category share comparison over a ``(group..., __cat, __c1,
+    __c2)`` category sided-counts frame: ``(group..., category,
+    n_ref, n_cur, share_ref, share_cur, share_delta)``, unordered —
+    serves ``queries.events_mix_shares`` AND
+    ``streaming.read_streaming_mix_shares``. One O(categories) window
+    stamps the per-side totals; a side with no rows reports NULL
+    shares rather than a 0/0."""
+    w = Window.partitionBy(*groups) if groups else Window.partitionBy()
+    n1 = F.sum("__c1").over(w).cast("long")
+    n2 = F.sum("__c2").over(w).cast("long")
+    share1 = F.when(
+        n1 > 0, F.round(F.col("__c1").cast("double") / n1.cast("double"), 6)
     )
-    d = _checked_keys(
-        d.select(*groups, F.col(cat_col).alias("__cat"), "__sd"),
-        [*groups, "__cat"],
-        op_name=op,
+    share2 = F.when(
+        n2 > 0, F.round(F.col("__c2").cast("double") / n2.cast("double"), 6)
     )
-    vc = d.groupBy(*groups, "__cat").agg(
-        F.sum(F.when(F.col("__sd") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("__c1"),
-        F.sum(F.when(F.col("__sd") == 2, 1).otherwise(0))
-        .cast("long")
-        .alias("__c2"),
+    return vc.select(
+        *groups,
+        F.col("__cat").alias("category"),
+        F.col("__c1").alias("n_ref"),
+        F.col("__c2").alias("n_cur"),
+        share1.alias("share_ref"),
+        share2.alias("share_cur"),
+        F.round(
+            F.coalesce(share2, F.lit(0.0)) - F.coalesce(share1, F.lit(0.0)),
+            6,
+        ).alias("share_delta"),
     )
-    return _chi2_from_counts(vc, groups)

@@ -7236,7 +7236,7 @@ def q_orders_price_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     side flag replaces the two disjoint filters, so orders is scanned
     once instead of once per era — identical sided-counts frame,
     bit-identical statistic."""
-    from .operators.twosample import mann_whitney_u_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7245,7 +7245,7 @@ def q_orders_price_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return mann_whitney_u_split(o, "x", side)
+    return two_sample("mwu", o, "x", side)
 
 
 def q_orders_price_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7260,7 +7260,7 @@ def q_orders_price_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     p=1 probks branch (operators/twosample.ks_two_sample; oracle
     pinned in tests/test_twosample.py). One-scan era split since r14
     (the orders_price_mwu note)."""
-    from .operators.twosample import ks_two_sample_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7269,7 +7269,7 @@ def q_orders_price_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return ks_two_sample_split(o, "x", side)
+    return two_sample("ks", o, "x", side)
 
 
 def q_events_type_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7283,7 +7283,7 @@ def q_events_type_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups report NULL stats with their counts (the psi asymmetry
     convention). One-scan era split since r14 (the orders_price_mwu
     note)."""
-    from .operators.twosample import mann_whitney_u_split
+    from .operators.twosample import two_sample
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -7293,7 +7293,7 @@ def q_events_type_mwu(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("ts") < "2024-01-16", 1).when(
         F.col("ts") >= "2024-01-16", 2
     )
-    return mann_whitney_u_split(e, "x", side, group_cols=["event_type"])
+    return two_sample("mwu", e, "x", side, group_cols=["event_type"])
 
 
 def q_events_type_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7304,7 +7304,7 @@ def q_events_type_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     step only at the type's own distinct values; the integer
     numerator max and its argmin location are exact per group.
     One-scan era split since r14 (the orders_price_mwu note)."""
-    from .operators.twosample import ks_two_sample_split
+    from .operators.twosample import two_sample
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -7314,7 +7314,7 @@ def q_events_type_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("ts") < "2024-01-16", 1).when(
         F.col("ts") >= "2024-01-16", 2
     )
-    return ks_two_sample_split(e, "x", side, group_cols=["event_type"])
+    return two_sample("ks", e, "x", side, group_cols=["event_type"])
 
 
 def q_revenue_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7511,7 +7511,7 @@ def q_orders_price_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_driftmetrics.py before registration; 10× probe in
     SCALING.md "r13-prep"). One-scan era split since r14 (the
     orders_price_mwu note)."""
-    from .operators.twosample import wasserstein_1_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7520,7 +7520,7 @@ def q_orders_price_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return wasserstein_1_split(o, "x", side)
+    return two_sample("w1", o, "x", side)
 
 
 def q_orders_price_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7533,7 +7533,7 @@ def q_orders_price_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical at any scale (operators/twosample.
     cramer_von_mises; oracle pinned in tests/test_driftmetrics.py).
     One-scan era split since r14 (the orders_price_mwu note)."""
-    from .operators.twosample import cramer_von_mises_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7542,7 +7542,7 @@ def q_orders_price_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return cramer_von_mises_split(o, "x", side)
+    return two_sample("cvm", o, "x", side)
 
 
 def q_orders_price_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7555,7 +7555,7 @@ def q_orders_price_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/twosample.mood_median_test; oracle pinned in
     tests/test_driftmetrics.py). One-scan era split since r14 (the
     orders_price_mwu note)."""
-    from .operators.twosample import mood_median_test_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7564,7 +7564,7 @@ def q_orders_price_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return mood_median_test_split(o, "x", side)
+    return two_sample("mood", o, "x", side)
 
 
 def q_events_type_kw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7598,7 +7598,7 @@ def q_events_type_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct values, never its row count; one-sided types report NULL
     w1 with their counts (the psi asymmetry convention). One-scan era
     split since r14 (the orders_price_mwu note)."""
-    from .operators.twosample import wasserstein_1_split
+    from .operators.twosample import two_sample
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -7608,7 +7608,7 @@ def q_events_type_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("ts") < "2024-01-16", 1).when(
         F.col("ts") >= "2024-01-16", 2
     )
-    return wasserstein_1_split(e, "x", side, group_cols=["event_type"])
+    return two_sample("w1", e, "x", side, group_cols=["event_type"])
 
 
 def q_segment_returns_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7720,7 +7720,7 @@ def q_orders_price_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one quantized double fold (operators/twosample.ansari_bradley;
     oracle pinned in tests/test_driftmetrics.py). One-scan era split
     since r14 (the orders_price_mwu note)."""
-    from .operators.twosample import ansari_bradley_split
+    from .operators.twosample import two_sample
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
@@ -7729,7 +7729,7 @@ def q_orders_price_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("o_orderdate") < "1998-01-01", 1).when(
         F.col("o_orderdate") >= "1998-01-01", 2
     )
-    return ansari_bradley_split(o, "x", side)
+    return two_sample("ab", o, "x", side)
 
 
 def q_events_type_jt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7765,15 +7765,13 @@ def q_events_mix_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/twosample.chi2_homogeneity; oracle pinned in
     tests/test_driftmetrics.py; plan pin tests/test_plans.py).
     One-scan era split since r14 (the orders_price_mwu note)."""
-    from .operators.twosample import chi2_homogeneity_split
+    from .operators.twosample import two_sample
 
     e = load_table(spark, sf_dir, "events")
     side = F.when(F.col("ts") < "2024-01-16", 1).when(
         F.col("ts") >= "2024-01-16", 2
     )
-    return chi2_homogeneity_split(
-        e.select("event_type", "ts"), "event_type", side
-    )
+    return two_sample("chi2", e.select("event_type", "ts"), "event_type", side)
 
 
 def q_events_mix_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7781,13 +7779,14 @@ def q_events_mix_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition, first half-month vs second — the magnitude/display
     companion of ``events_mix_chi2`` ("the view mix moved from 31% to
     38%"): the χ² omnibus says the composition shifted, this names
-    the category and by how much. Two map-side count aggregates on
-    the category key merged full-outer (O(categories) rows at any
-    fact volume — the chi2 cost shape), shares as one double each,
+    the category and by how much. One conditional count aggregate on
+    the category key (O(categories) rows at any fact volume — the
+    chi2 cost shape), shares as one double each,
     delta at 6dp; one-sided categories report NULL share for the
     empty side (never a 0/0). Deterministic category order (the
-    registry hash contract). This is the batch twin of
-    ``streaming.read_streaming_mix_shares`` over the
+    registry hash contract). The share tail
+    (``twosample._mix_shares``) is the one
+    ``streaming.read_streaming_mix_shares`` serves over the
     ``start_streaming_mix`` state."""
     e = load_table(spark, sf_dir, "events")
     # one-scan era split since r14 (the orders_price_mwu note): one
@@ -7797,6 +7796,8 @@ def q_events_mix_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("ts") < "2024-01-16", 1).when(
         F.col("ts") >= "2024-01-16", 2
     )
+    from .operators.twosample import _mix_shares
+
     vc = (
         e.select(F.col("event_type").alias("category"), side.alias("__s"))
         .filter(F.col("__s").isNotNull())
@@ -7804,34 +7805,14 @@ def q_events_mix_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.when(F.col("__s") == 1, 1).otherwise(0))
             .cast("long")
-            .alias("n_ref"),
+            .alias("__c1"),
             F.sum(F.when(F.col("__s") == 2, 1).otherwise(0))
             .cast("long")
-            .alias("n_cur"),
+            .alias("__c2"),
         )
     )
-    w = Window.partitionBy()
-    n1 = F.sum("n_ref").over(w).cast("long")
-    n2 = F.sum("n_cur").over(w).cast("long")
-    share_ref = F.when(
-        n1 > 0,
-        F.round(F.col("n_ref").cast("double") / n1.cast("double"), 6),
-    )
-    share_cur = F.when(
-        n2 > 0,
-        F.round(F.col("n_cur").cast("double") / n2.cast("double"), 6),
-    )
-    return vc.select(
-        "category",
-        "n_ref",
-        "n_cur",
-        share_ref.alias("share_ref"),
-        share_cur.alias("share_cur"),
-        F.round(
-            F.coalesce(share_cur, F.lit(0.0))
-            - F.coalesce(share_ref, F.lit(0.0)),
-            6,
-        ).alias("share_delta"),
+    return _mix_shares(
+        vc.withColumnRenamed("category", "__cat"), []
     ).orderBy("category")
 
 

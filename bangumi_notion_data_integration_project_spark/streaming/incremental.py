@@ -1643,8 +1643,9 @@ def start_streaming_mwu(
     frozen ONCE at start, every micro-batch folds its own value counts
     into the stored current side, and the one-row verdict
     ``(n_ref, n_cur, u_stat, auc, tie_term, z, p_value)`` is served by
-    :func:`read_streaming_mwu` through the SAME formula tail as the
-    batch operator (``twosample._mwu_from_counts``), so the streamed
+    ``read_streaming_two_sample(spark, mwu_dir, "mwu")`` through the
+    SAME formula tail as the batch operator
+    (``twosample._mwu_from_counts``), so the streamed
     statistic equals batch ``mann_whitney_u(ref, union-of-batches)``
     exactly — the ``_psi_from_base`` shared-formula rule.
 
@@ -1709,8 +1710,9 @@ def start_streaming_ks(
     :func:`start_streaming_mwu` (location significance): identical
     sided-counts state and fold (one builder serves both rank twins —
     the state IS ``_sided_counts``), with the verdict served by
-    :func:`read_streaming_ks` through the batch operator's exact
-    formula tail (``twosample._ks_from_counts``), so the streamed
+    ``read_streaming_two_sample(spark, ks_dir, "ks")`` through the
+    batch operator's exact formula tail
+    (``twosample._ks_from_counts``), so the streamed
     D/location/p equal batch ``ks_two_sample(ref, union-of-batches)``
     bit-for-bit. All the MWU twin's contracts apply verbatim:
     O(distinct values) state (caller controls value cardinality),
@@ -1743,11 +1745,14 @@ def _start_streaming_sided_counts(
     group_cols: "list[str] | None" = None,
     categorical: bool = False,
 ):
-    """The shared fold behind the MWU and KS streaming twins: both
-    statistics are pure functions of the SAME ``(__v, __c1, __c2)``
-    sided-counts frame, so the state, the replay guard, and the
-    reference fingerprint are one implementation with only the
-    serving-time formula tail differing.
+    """The shared fold behind the MWU, KS and mix streaming twins:
+    every two-sample statistic is a pure function of the SAME
+    ``(__v | __cat, __c1, __c2)`` sided-counts frame, so the state,
+    the replay guard, and the reference fingerprint are one
+    implementation, and :func:`read_streaming_two_sample` picks the
+    formula tail at serving time. The frozen reference (literal side
+    1) and each batch's delta (literal side 2) come from the batch
+    operators' own counts function, ``twosample._sided_counts``.
 
     With ``group_cols`` the state is keyed ``(group..., __v)`` — one
     per-key sided-counts row set, O(keys × distinct values) — and
@@ -1760,37 +1765,18 @@ def _start_streaming_sided_counts(
     re-points at a different grouped reference fails the ``__ref_fp``
     gate (the fingerprint hashes the group key with each value
     row)."""
-    from ..operators.drift import _checked_keys, _checked_long
+    from ..operators.twosample import _sided_counts
 
     groups = list(group_cols or [])
     kcol = "__cat" if categorical else "__v"
 
-    def keyed(df: DataFrame, side_name: str) -> DataFrame:
-        d = df
-        if categorical:
-            # category keys are checked non-NULL like group keys (the
-            # chi2_homogeneity fail-loud convention), not cast to long
-            d = _checked_keys(
-                d.select(*groups, F.col(value_col).alias(kcol)),
-                [*groups, kcol],
-                op_name=check_op,
-            )
-            return d
-        if groups:
-            d = _checked_keys(d, groups, op_name=check_op)
-        return d.select(
-            *groups,
-            _checked_long(
-                F.col(value_col), side_name, check_op
-            ).alias(kcol),
+    def counts(df: DataFrame, side: int) -> DataFrame:
+        return _sided_counts(
+            df, value_col, F.lit(side), groups, check_op,
+            categorical=categorical,
         )
 
-    ref_counts = (
-        keyed(ref, "reference")
-        .groupBy(*groups, kcol)
-        .agg(F.count("*").cast("long").alias("__c1"))
-        .localCheckpoint(eager=True)
-    )
+    ref_counts = counts(ref, 1).localCheckpoint(eager=True)
     # order-independent fingerprint of the frozen reference side: XOR
     # of per-row hashes over distinct (group..., key, __c1) rows
     # (distinct by the (group, key) pair, so XOR cancellation is
@@ -1830,35 +1816,19 @@ def _start_streaming_sided_counts(
             if bid is not None and batch_id <= bid:
                 wm["v"] = bid
                 return  # checkpoint replay of an already-folded batch
-        delta = (
-            keyed(batch, "input")
-            .groupBy(*groups, kcol)
-            .agg(F.count("*").cast("long").alias("__c2"))
+        base = (
+            ref_counts
+            if stored is None
+            else stored.select(*groups, kcol, "__c1", "__c2")
         )
-        if stored is not None:
-            merged = (
-                stored.select(*groups, kcol, "__c1", "__c2")
-                .unionByName(
-                    delta.withColumn("__c1", F.lit(0).cast("long"))
-                )
-                .groupBy(*groups, kcol)
-                .agg(
-                    F.sum("__c1").cast("long").alias("__c1"),
-                    F.sum("__c2").cast("long").alias("__c2"),
-                )
+        merged = (
+            base.unionByName(counts(batch, 2))
+            .groupBy(*groups, kcol)
+            .agg(
+                F.sum("__c1").cast("long").alias("__c1"),
+                F.sum("__c2").cast("long").alias("__c2"),
             )
-        else:
-            merged = (
-                ref_counts.withColumn("__c2", F.lit(0).cast("long"))
-                .unionByName(
-                    delta.withColumn("__c1", F.lit(0).cast("long"))
-                )
-                .groupBy(*groups, kcol)
-                .agg(
-                    F.sum("__c1").cast("long").alias("__c1"),
-                    F.sum("__c2").cast("long").alias("__c2"),
-                )
-            )
+        )
         tmp = staging_path(state_dir)
         merged.withColumn("__batch_id", F.lit(batch_id)).withColumn(
             "__ref_fp", F.lit(ref_fp).cast("long")
@@ -1876,66 +1846,48 @@ def _start_streaming_sided_counts(
     )
 
 
-def _sided_state(spark: SparkSession, state_dir: str):
-    """Load a stored sided-counts state and detect its group columns
-    (everything that is not a reserved state column, in stored order)
-    — so the per-key monitors need zero reader configuration and the
-    ungrouped states read exactly as before."""
+def _stored_counts(
+    spark: SparkSession, state_dir: str, key: str, caller: str
+):
+    """Load a stored sided-counts state keyed by ``key`` (``__cat`` for
+    a ``start_streaming_mix`` state, ``__v`` for the value twins) and
+    detect its group columns from the state itself (everything that is
+    not a reserved state column, in stored order), so the per-key
+    monitors need zero reader configuration. A state keyed by the
+    other column raises ``ValueError`` naming it."""
     df = spark.read.parquet(state_dir)
-    reserved = {"__v", "__c1", "__c2", "__batch_id", "__ref_fp"}
+    found = "__cat" if "__cat" in df.columns else "__v"
+    if found != key:
+        raise ValueError(
+            f"{caller}: the state at {state_dir!r} is keyed by {found},"
+            f" not {key} — read a start_streaming_mix state as 'chi2'"
+            " or mix shares, a start_streaming_mwu/ks state as a value"
+            " kind"
+        )
+    reserved = {key, "__c1", "__c2", "__batch_id", "__ref_fp"}
     groups = [c for c in df.columns if c not in reserved]
-    return df.select(*groups, "__v", "__c1", "__c2"), groups
+    return df.select(*groups, key, "__c1", "__c2"), groups
 
 
-def read_streaming_mwu(spark: SparkSession, mwu_dir: str) -> DataFrame:
-    """The MWU verdict from the stored sided-counts state — the
-    serving path of :func:`start_streaming_mwu`, computed by the
-    identical formula tail as the batch operator (one row, or one row
-    per key for a grouped state — group columns auto-detected)."""
-    from ..operators.twosample import _mwu_from_counts
+def read_streaming_two_sample(
+    spark: SparkSession, state_dir: str, kind: str
+) -> DataFrame:
+    """The ``kind`` verdict (any key of ``twosample._FROM_COUNTS``:
+    mwu, ks, w1, cvm, mood, ab, bm over a value state — the one
+    written by ``start_streaming_mwu``/``start_streaming_ks`` — or
+    chi2 over a ``start_streaming_mix`` category state) from the
+    stored sided-counts state, computed by the batch operator's own
+    formula tail, so it equals the batch verdict on ``ref`` against
+    the union of the folded batches. One row, or one row per key for a
+    grouped state. An unknown kind, or a kind that does not fit the
+    state's key column, raises ``ValueError``."""
+    from ..operators.twosample import _from_counts
 
-    vc, groups = _sided_state(spark, mwu_dir)
-    return _mwu_from_counts(vc, groups)
-
-
-def read_streaming_ks(spark: SparkSession, ks_dir: str) -> DataFrame:
-    """The one-row KS verdict from the stored sided-counts state —
-    the serving path of :func:`start_streaming_ks`, computed by the
-    identical formula tail as the batch operator."""
-    from ..operators.twosample import _ks_from_counts
-
-    vc, groups = _sided_state(spark, ks_dir)
-    return _ks_from_counts(vc, groups)
-
-
-def read_streaming_w1(spark: SparkSession, state_dir: str) -> DataFrame:
-    """1-Wasserstein verdict from ANY stored sided-counts state
-    (``start_streaming_mwu`` or ``start_streaming_ks`` — the state is
-    identical): the whole two-sample family are pure functions of one
-    table, so one streaming fold serves five batch-exact verdicts
-    (MWU, KS, W1, CvM, Mood) with zero extra state or fold code."""
-    from ..operators.twosample import _w1_from_counts
-
-    vc, groups = _sided_state(spark, state_dir)
-    return _w1_from_counts(vc, groups)
-
-
-def read_streaming_cvm(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Cramér-von Mises verdict from any stored sided-counts state
-    (see :func:`read_streaming_w1`)."""
-    from ..operators.twosample import _cvm_from_counts
-
-    vc, groups = _sided_state(spark, state_dir)
-    return _cvm_from_counts(vc, groups)
-
-
-def read_streaming_mood(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Mood median-test verdict from any stored sided-counts state
-    (see :func:`read_streaming_w1`)."""
-    from ..operators.twosample import _mood_from_counts
-
-    vc, groups = _sided_state(spark, state_dir)
-    return _mood_from_counts(vc, groups)
+    _, key, tail = _from_counts(kind, "read_streaming_two_sample")
+    vc, groups = _stored_counts(
+        spark, state_dir, key, f"read_streaming_two_sample({kind!r})"
+    )
+    return tail(vc, groups)
 
 
 def start_streaming_mix(
@@ -1957,8 +1909,9 @@ def start_streaming_mix(
     the state is the category sided-counts frame itself
     ``(group..., __cat, __c1, __c2, __batch_id)`` — O(categories)
     rows, the smallest state in the family. Served by
-    :func:`read_streaming_chi2` (the significance verdict through the
-    batch ``chi2_homogeneity`` formula tail — exact χ²₁ at k = 2) and
+    ``read_streaming_two_sample(spark, state_dir, "chi2")`` (the
+    significance verdict through the batch ``chi2_homogeneity``
+    formula tail — exact χ²₁ at k = 2) and
     :func:`read_streaming_mix_shares` (the per-category magnitude
     display: shares per side and the share delta, the "which category
     moved" companion the χ² omnibus does not name).
@@ -1984,61 +1937,22 @@ def start_streaming_mix(
     )
 
 
-def _mix_state(spark: SparkSession, state_dir: str):
-    """Load a stored category sided-counts state and detect its group
-    columns (the ``_sided_state`` rule with the ``__cat`` key)."""
-    df = spark.read.parquet(state_dir)
-    reserved = {"__cat", "__c1", "__c2", "__batch_id", "__ref_fp"}
-    groups = [c for c in df.columns if c not in reserved]
-    return df.select(*groups, "__cat", "__c1", "__c2"), groups
-
-
-def read_streaming_chi2(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The χ² mix-homogeneity verdict from the stored category
-    sided-counts state — the serving path of
-    :func:`start_streaming_mix`, computed by the identical formula
-    tail as the batch operator (one row, or one per key for a grouped
-    state)."""
-    from ..operators.twosample import _chi2_from_counts
-
-    vc, groups = _mix_state(spark, state_dir)
-    return _chi2_from_counts(vc, groups)
-
-
 def read_streaming_mix_shares(
     spark: SparkSession, state_dir: str
 ) -> DataFrame:
-    """Per-category share comparison from the same stored state — the
-    magnitude/display companion of :func:`read_streaming_chi2` ("the
+    """Per-category share comparison from a ``start_streaming_mix``
+    state — the magnitude/display companion of the chi2 verdict ("the
     view mix moved from 31% to 38%"): shares per side, the share
     delta, ordered by |delta| descending so the biggest mover leads.
-    One O(categories) window + projection; one-sided states report
-    NULL shares for the empty side rather than a 0/0."""
-    from pyspark.sql import Window
+    The batch ``events_mix_shares`` query's own tail
+    (``twosample._mix_shares``); one-sided states report NULL shares
+    for the empty side rather than a 0/0."""
+    from ..operators.twosample import _mix_shares
 
-    vc, groups = _mix_state(spark, state_dir)
-    w = Window.partitionBy(*groups) if groups else Window.partitionBy()
-    n1 = F.sum("__c1").over(w).cast("long")
-    n2 = F.sum("__c2").over(w).cast("long")
-    share1 = F.when(
-        n1 > 0, F.round(F.col("__c1").cast("double") / n1.cast("double"), 6)
+    vc, groups = _stored_counts(
+        spark, state_dir, "__cat", "read_streaming_mix_shares"
     )
-    share2 = F.when(
-        n2 > 0, F.round(F.col("__c2").cast("double") / n2.cast("double"), 6)
-    )
-    out = vc.select(
-        *groups,
-        F.col("__cat").alias("category"),
-        F.col("__c1").alias("n_ref"),
-        F.col("__c2").alias("n_cur"),
-        share1.alias("share_ref"),
-        share2.alias("share_cur"),
-        F.round(
-            F.coalesce(share2, F.lit(0.0)) - F.coalesce(share1, F.lit(0.0)),
-            6,
-        ).alias("share_delta"),
-    )
-    return out.orderBy(
+    return _mix_shares(vc, groups).orderBy(
         *groups, F.abs(F.col("share_delta")).desc(), "category"
     )
 
@@ -2194,28 +2108,6 @@ def read_streaming_dunn(
     return _dunn_from_per_group(
         _kw_per_group_from_counts(vc, "__g", []), "__g", [], alpha
     )
-
-
-def read_streaming_ab(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Ansari-Bradley scale verdict from any stored sided-counts state
-    (see :func:`read_streaming_w1`): the dispersion leg served from
-    the SAME fold — one stored state, six batch-exact verdicts (MWU,
-    KS, W1, CvM, Mood, AB)."""
-    from ..operators.twosample import _ab_from_counts
-
-    vc, groups = _sided_state(spark, state_dir)
-    return _ab_from_counts(vc, groups)
-
-
-def read_streaming_bm(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Brunner-Munzel verdict from any stored sided-counts state (see
-    :func:`read_streaming_w1`): the unequal-variance location leg
-    served from the SAME fold — one stored state, SEVEN batch-exact
-    verdicts (MWU, KS, W1, CvM, Mood, AB, BM)."""
-    from ..operators.twosample import _bm_from_counts
-
-    vc, groups = _sided_state(spark, state_dir)
-    return _bm_from_counts(vc, groups)
 
 
 def read_streaming_median_k(

@@ -389,6 +389,7 @@ def test_one_sided_counts_state_serves_all_verdicts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from bangumi_notion_data_integration_project_spark.operators.twosample import (
+        _FROM_COUNTS,
         ansari_bradley,
         brunner_munzel,
         cramer_von_mises,
@@ -399,13 +400,7 @@ def test_one_sided_counts_state_serves_all_verdicts(spark, tmp_path):
     )
     from bangumi_notion_data_integration_project_spark.streaming.incremental import (
         read_event_stream,
-        read_streaming_ab,
-        read_streaming_bm,
-        read_streaming_cvm,
-        read_streaming_ks,
-        read_streaming_mood,
-        read_streaming_mwu,
-        read_streaming_w1,
+        read_streaming_two_sample,
         start_streaming_mwu,
     )
 
@@ -454,18 +449,22 @@ def test_one_sided_counts_state_serves_all_verdicts(spark, tmp_path):
     cur = rows_df([r for b in batches for r in b]).select(
         F.round(F.col("value")).cast("long").alias("x")
     )
-    for read_fn, batch_fn in (
-        (read_streaming_mwu, mann_whitney_u),
-        (read_streaming_ks, ks_two_sample),
-        (read_streaming_w1, wasserstein_1),
-        (read_streaming_cvm, cramer_von_mises),
-        (read_streaming_mood, mood_median_test),
-        (read_streaming_ab, ansari_bradley),
-        (read_streaming_bm, brunner_munzel),
-    ):
-        got = tuple(read_fn(spark, state).collect()[0])
+    batch = {
+        "mwu": mann_whitney_u,
+        "ks": ks_two_sample,
+        "w1": wasserstein_1,
+        "cvm": cramer_von_mises,
+        "mood": mood_median_test,
+        "ab": ansari_bradley,
+        "bm": brunner_munzel,
+    }
+    assert set(batch) == {
+        kind for kind, (_, key, _) in _FROM_COUNTS.items() if key == "__v"
+    }
+    for kind, batch_fn in batch.items():
+        got = tuple(read_streaming_two_sample(spark, state, kind).collect()[0])
         want = tuple(batch_fn(ref_df, cur, "x").collect()[0])
-        assert got == want, read_fn.__name__
+        assert got == want, kind
 
 
 def test_driftmetrics_overflow_regressions(spark):
@@ -2241,13 +2240,7 @@ def test_grouped_sided_counts_state_serves_per_key_verdicts(spark, tmp_path):
     )
     from bangumi_notion_data_integration_project_spark.streaming.incremental import (
         read_event_stream,
-        read_streaming_ab,
-        read_streaming_bm,
-        read_streaming_cvm,
-        read_streaming_ks,
-        read_streaming_mood,
-        read_streaming_mwu,
-        read_streaming_w1,
+        read_streaming_two_sample,
         start_streaming_mwu,
     )
 
@@ -2305,23 +2298,26 @@ def test_grouped_sided_counts_state_serves_per_key_verdicts(spark, tmp_path):
         "event_type",
         F.round(F.col("value")).cast("long").alias("x"),
     )
-    for read_fn, batch_fn in (
-        (read_streaming_mwu, mann_whitney_u),
-        (read_streaming_ks, ks_two_sample),
-        (read_streaming_w1, wasserstein_1),
-        (read_streaming_cvm, cramer_von_mises),
-        (read_streaming_mood, mood_median_test),
-        (read_streaming_ab, ansari_bradley),
-        (read_streaming_bm, brunner_munzel),
+    for kind, batch_fn in (
+        ("mwu", mann_whitney_u),
+        ("ks", ks_two_sample),
+        ("w1", wasserstein_1),
+        ("cvm", cramer_von_mises),
+        ("mood", mood_median_test),
+        ("ab", ansari_bradley),
+        ("bm", brunner_munzel),
     ):
-        got = [tuple(r) for r in read_fn(spark, state).collect()]
+        got = [
+            tuple(r)
+            for r in read_streaming_two_sample(spark, state, kind).collect()
+        ]
         want = [
             tuple(r)
             for r in batch_fn(
                 ref_df, cur, "x", group_cols=["event_type"]
             ).collect()
         ]
-        assert got == want, read_fn.__name__
+        assert got == want, kind
         assert len(got) == 3  # one verdict row per key
 
     # the drifted key pages, the flat keys do not — and BH rides the
@@ -2329,7 +2325,7 @@ def test_grouped_sided_counts_state_serves_per_key_verdicts(spark, tmp_path):
     sel = {
         r["event_type"]: r["selected"]
         for r in bh_select(
-            read_streaming_mwu(spark, state),
+            read_streaming_two_sample(spark, state, "mwu"),
             "p_value",
             tie_cols=["event_type"],
         ).collect()
@@ -2354,3 +2350,146 @@ def test_grouped_sided_counts_state_serves_per_key_verdicts(spark, tmp_path):
     )
     with pytest.raises(Exception):
         q2.awaitTermination(180)
+
+
+@pytest.fixture(scope="module")
+def stored_states(spark, tmp_path_factory):
+    """Three small drained sided-counts states — an ungrouped and a
+    grouped ``start_streaming_mwu`` state and a ``start_streaming_mix``
+    state — with the reference and delivered rows that built them:
+    ``{name: (state_dir, ref_rows, cur_rows, group_cols, key)}``."""
+    from pyspark.sql import functions as F
+
+    from bangumi_notion_data_integration_project_spark.streaming.incremental import (
+        read_event_stream,
+        start_streaming_mix,
+        start_streaming_mwu,
+    )
+
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
+    rng = random.Random(71)
+    types = ("click", "view", "buy")
+
+    def rows(n, day):
+        return [
+            (i, f"2024-01-0{day} 00:00:00", day, rng.choice(types),
+             float(rng.randrange(0, 30)))
+            for i in range(n)
+        ]
+
+    def frame(rs):
+        return spark.createDataFrame(
+            rs, schema.replace("ts timestamp", "ts string")
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+    x = F.col("value").cast("long").alias("x")
+    specs = {
+        "mwu": (start_streaming_mwu, "value_col", [], "__v"),
+        "mwu_grouped": (start_streaming_mwu, "value_col", ["event_type"], "__v"),
+        "mix": (start_streaming_mix, "cat_col", [], "__cat"),
+    }
+    out = {}
+    for name, (start, arg, groups, key) in specs.items():
+        root = tmp_path_factory.mktemp(name)
+        ref_rows, cur_rows = rows(60, 1), rows(40, 2)
+        frame(cur_rows).coalesce(1).write.parquet(str(root / "in"))
+        col = [x] if key == "__v" else ["event_type"]
+        q = start(
+            read_event_stream(spark, str(root / "in"), schema).select(
+                *groups, *col, "ts"
+            ),
+            str(root / "state"),
+            **{arg: "x" if key == "__v" else "event_type"},
+            ref=frame(ref_rows).select(*groups, *col),
+            checkpoint_dir=str(root / "ckpt"),
+            **({"group_cols": groups} if groups else {}),
+        )
+        q.awaitTermination(180)
+        out[name] = (str(root / "state"), ref_rows, cur_rows, groups, key)
+    return out
+
+
+@pytest.mark.parametrize("name", ["mwu", "mwu_grouped", "mix"])
+def test_stored_state_format_is_pinned(spark, stored_states, name):
+    """The stored sided-counts state is an on-disk format: a restart
+    reads the state the previous process wrote and gates it on
+    ``__ref_fp``. Its columns, their types, its counts and a
+    ``__ref_fp`` recomputed here from the reference rows —
+    ``bit_xor(xxhash64(group..., key, __c1))``, 0 when empty — are
+    pinned, so a drift in ``_sided_counts`` cannot silently fail every
+    existing state's restart gate."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    state, ref_rows, cur_rows, groups, key = stored_states[name]
+    df = spark.read.parquet(state)
+    kt = "bigint" if key == "__v" else "string"
+    assert df.dtypes == [
+        *((g, "string") for g in groups),
+        (key, kt),
+        ("__c1", "bigint"),
+        ("__c2", "bigint"),
+        ("__batch_id", "int"),
+        ("__ref_fp", "bigint"),
+    ]
+
+    def key_of(r):
+        k = int(r[4]) if key == "__v" else r[3]
+        return (r[3], k) if groups else (k,)
+
+    c1, c2 = Counter(map(key_of, ref_rows)), Counter(map(key_of, cur_rows))
+    got = {
+        tuple(r[:-2]): (r[-2], r[-1])
+        for r in df.select(*groups, key, "__c1", "__c2").collect()
+    }
+    assert got == {k: (c1[k], c2[k]) for k in c1.keys() | c2.keys()}
+
+    ref_counts = spark.createDataFrame(
+        [(*k, n) for k, n in c1.items()],
+        ", ".join([*(f"{g} string" for g in groups), f"{key} {kt}", "__c1 long"]),
+    )
+    want_fp = ref_counts.agg(
+        F.coalesce(F.bit_xor(F.xxhash64(*groups, key, "__c1")), F.lit(0))
+    ).first()[0]
+    assert {r[0] for r in df.select("__ref_fp").distinct().collect()} == {
+        want_fp
+    }
+    assert want_fp != 0
+
+
+def test_mix_state_read_as_a_value_kind_fails_loud(spark, stored_states):
+    """A ``start_streaming_mix`` state read as a value kind raises
+    ValueError naming its ``__cat`` key (it used to take ``__cat`` for
+    a group column and fail in analysis on the missing ``__v``); an
+    unknown kind raises listing the valid kinds; chi2 still reads."""
+    from bangumi_notion_data_integration_project_spark.streaming.incremental import (
+        read_streaming_two_sample,
+    )
+
+    mix = stored_states["mix"][0]
+    for kind in ("mwu", "bm"):
+        with pytest.raises(ValueError, match="keyed by __cat, not __v"):
+            read_streaming_two_sample(spark, mix, kind)
+    with pytest.raises(ValueError, match="'psi'.*'ab', 'bm', 'chi2'"):
+        read_streaming_two_sample(spark, mix, "psi")
+    assert read_streaming_two_sample(spark, mix, "chi2").count() == 1
+
+
+def test_value_state_read_as_chi2_fails_loud(spark, stored_states):
+    """A ``start_streaming_mwu`` state read as chi2 (or as mix shares)
+    raises ValueError naming its ``__v`` key; the value kinds still
+    read it."""
+    from bangumi_notion_data_integration_project_spark.streaming.incremental import (
+        read_streaming_mix_shares,
+        read_streaming_two_sample,
+    )
+
+    for name in ("mwu", "mwu_grouped"):
+        state = stored_states[name][0]
+        with pytest.raises(ValueError, match="keyed by __v, not __cat"):
+            read_streaming_two_sample(spark, state, "chi2")
+        with pytest.raises(ValueError, match="keyed by __v, not __cat"):
+            read_streaming_mix_shares(spark, state)
+    mwu = stored_states["mwu"][0]
+    assert read_streaming_two_sample(spark, mwu, "bm").count() == 1

@@ -2260,7 +2260,7 @@ def test_streaming_psi_null_value_fails_loud(spark, tmp_path):
 
 def test_streaming_mwu_equals_batch_and_skips_replay(spark, tmp_path):
     """MWU twin (rung 3, sided-count sum-fold): after draining 3
-    drifting batches, read_streaming_mwu equals the batch operator on
+    drifting batches, the "mwu" reader equals the batch operator on
     ref vs the concatenated delivered input EXACTLY (the shared
     _mwu_from_counts guarantee); a checkpoint wipe re-delivers every
     batch and the __batch_id guard must skip them; a genuinely new
@@ -2273,7 +2273,7 @@ def test_streaming_mwu_equals_batch_and_skips_replay(spark, tmp_path):
         mann_whitney_u,
     )
     from bangumi_notion_data_integration_project_spark.streaming.incremental import (
-        read_streaming_mwu,
+        read_streaming_two_sample,
         start_streaming_mwu,
     )
 
@@ -2313,7 +2313,9 @@ def test_streaming_mwu_equals_batch_and_skips_replay(spark, tmp_path):
         q.awaitTermination(180)
 
     def stored():
-        return tuple(read_streaming_mwu(spark, mwu_dir).collect()[0])
+        return tuple(
+            read_streaming_two_sample(spark, mwu_dir, "mwu").collect()[0]
+        )
 
     def direct(delivered):
         cur = _rows(spark, delivered).select(
@@ -2525,7 +2527,7 @@ def test_streaming_mwu_ref_gate(spark, tmp_path):
 
 def test_streaming_ks_equals_batch_and_skips_replay(spark, tmp_path):
     """KS twin (rung 3, shared sided-counts fold with the MWU twin):
-    after draining drifting batches, read_streaming_ks equals the
+    after draining drifting batches, the "ks" reader equals the
     batch operator on ref vs the concatenated delivered input EXACTLY
     (the shared _ks_from_counts guarantee); a checkpoint wipe
     re-delivers every batch and the __batch_id guard must skip them;
@@ -2538,7 +2540,7 @@ def test_streaming_ks_equals_batch_and_skips_replay(spark, tmp_path):
         ks_two_sample,
     )
     from bangumi_notion_data_integration_project_spark.streaming.incremental import (
-        read_streaming_ks,
+        read_streaming_two_sample,
         start_streaming_ks,
     )
 
@@ -2578,7 +2580,9 @@ def test_streaming_ks_equals_batch_and_skips_replay(spark, tmp_path):
         q.awaitTermination(180)
 
     def stored():
-        return tuple(read_streaming_ks(spark, ks_dir).collect()[0])
+        return tuple(
+            read_streaming_two_sample(spark, ks_dir, "ks").collect()[0]
+        )
 
     def direct(delivered):
         cur = _rows(spark, delivered).select(
@@ -3043,7 +3047,7 @@ def test_streaming_kw_checkpoint_relocation_resumes_exactly(spark, tmp_path):
 
 def test_streaming_mix_equals_batch_chi2_and_names_the_mover(spark, tmp_path):
     """The categorical rung streamed: after draining batches where the
-    event-type MIX shifts, read_streaming_chi2 equals batch
+    event-type MIX shifts, the "chi2" reader equals batch
     chi2_homogeneity(ref, delivered-union) EXACTLY (the shared
     _chi2_from_counts tail), read_streaming_mix_shares names the
     category that moved (biggest |share delta| first, shares
@@ -3058,8 +3062,8 @@ def test_streaming_mix_equals_batch_chi2_and_names_the_mover(spark, tmp_path):
         chi2_homogeneity,
     )
     from bangumi_notion_data_integration_project_spark.streaming.incremental import (
-        read_streaming_chi2,
         read_streaming_mix_shares,
+        read_streaming_two_sample,
         start_streaming_mix,
     )
 
@@ -3098,7 +3102,12 @@ def test_streaming_mix_equals_batch_chi2_and_names_the_mover(spark, tmp_path):
     cur_df = _rows(spark, [r for b in batches for r in b]).select(
         "event_type"
     )
-    got = tuple(read_streaming_chi2(spark, state).collect()[0])
+    def chi2():
+        return tuple(
+            read_streaming_two_sample(spark, state, "chi2").collect()[0]
+        )
+
+    got = chi2()
     want = tuple(
         chi2_homogeneity(ref_df, cur_df, "event_type").collect()[0]
     )
@@ -3119,7 +3128,7 @@ def test_streaming_mix_equals_batch_chi2_and_names_the_mover(spark, tmp_path):
     # wipe: renumbered re-delivery must be skipped by the guard
     shutil.rmtree(ckpt)
     run(ref_df, ckpt)
-    assert tuple(read_streaming_chi2(spark, state).collect()[0]) == want
+    assert chi2() == want
 
     # a genuinely new batch folds
     extra = [
@@ -3131,7 +3140,7 @@ def test_streaming_mix_equals_batch_chi2_and_names_the_mover(spark, tmp_path):
     cur2 = _rows(
         spark, [r for b in batches for r in b] + extra
     ).select("event_type")
-    assert tuple(read_streaming_chi2(spark, state).collect()[0]) == tuple(
+    assert chi2() == tuple(
         chi2_homogeneity(ref_df, cur2, "event_type").collect()[0]
     )
 

@@ -683,29 +683,26 @@ def test_mwu_ks_empty_inputs_report_zero_counts(spark):
 
 
 def test_split_variants_match_two_input(spark):
-    """The r14 one-scan era-split twins must be BIT-IDENTICAL to the
-    two-input forms on every statistic: same sided-counts frame in,
-    same *_from_counts tail out — the contract that let the registered
+    """The one-scan form must be BIT-IDENTICAL to the two-input form
+    on every statistic, for every kind in ``_FROM_COUNTS`` plus the
+    z-test, grouped and ungrouped: same sided-counts frame in, same
+    *_from_counts tail out — the contract that let the registered
     drift queries move to one scan without re-pinning any oracle.
     Covers ties, a value present in only one era, and rows in neither
     era (side NULL == dropped by both disjoint filters)."""
     from pyspark.sql import functions as F
 
     from bangumi_notion_data_integration_project_spark.operators.twosample import (
+        _FROM_COUNTS,
         ansari_bradley,
-        ansari_bradley_split,
+        brunner_munzel,
         chi2_homogeneity,
-        chi2_homogeneity_split,
         cramer_von_mises,
-        cramer_von_mises_split,
-        ks_two_sample_split,
-        mann_whitney_u_split,
         mood_median_test,
-        mood_median_test_split,
         two_proportion_ztest,
         two_proportion_ztest_split,
+        two_sample,
         wasserstein_1,
-        wasserstein_1_split,
     )
 
     rows = []
@@ -717,25 +714,30 @@ def test_split_variants_match_two_input(spark):
     # a value only the ref era sees, and a group with one-sided data
     rows += [("a", 1, 999), ("c", 2, 5), ("c", 2, 5)]
     df = spark.createDataFrame(rows, "g: string, era: int, x: long")
-    ref = df.filter(F.col("era") == 1)
-    cur = df.filter(F.col("era") == 2)
     side = F.col("era")
+    cats = df.select(
+        "g", "era", "x", F.concat(F.lit("c"), F.col("x") % 5).alias("cat")
+    )
+    ref = cats.filter(F.col("era") == 1)
+    cur = cats.filter(F.col("era") == 2)
 
-    for two_input, split in [
-        (mann_whitney_u, mann_whitney_u_split),
-        (ks_two_sample, ks_two_sample_split),
-        (wasserstein_1, wasserstein_1_split),
-        (cramer_von_mises, cramer_von_mises_split),
-        (mood_median_test, mood_median_test_split),
-        (ansari_bradley, ansari_bradley_split),
-    ]:
+    named = {
+        "mwu": mann_whitney_u,
+        "ks": ks_two_sample,
+        "w1": wasserstein_1,
+        "cvm": cramer_von_mises,
+        "mood": mood_median_test,
+        "ab": ansari_bradley,
+        "bm": brunner_munzel,
+        "chi2": chi2_homogeneity,
+    }
+    assert set(named) == set(_FROM_COUNTS)
+    for kind, two_input in named.items():
+        col = "cat" if kind == "chi2" else "x"
         for gc in (None, ["g"]):
-            a = two_input(ref, cur, "x", group_cols=gc).collect()
-            b = split(df, "x", side, group_cols=gc).collect()
-            assert list(map(tuple, a)) == list(map(tuple, b)), (
-                two_input.__name__,
-                gc,
-            )
+            a = two_input(ref, cur, col, group_cols=gc).collect()
+            b = two_sample(kind, cats, col, side, group_cols=gc).collect()
+            assert list(map(tuple, a)) == list(map(tuple, b)), (kind, gc)
 
     flags = df.select("g", "era", (F.col("x") % 2).alias("ok"))
     fr = flags.filter(F.col("era") == 1)
@@ -747,14 +749,6 @@ def test_split_variants_match_two_input(spark):
         ).collect()
         assert list(map(tuple, a)) == list(map(tuple, b)), ("ztest", gc)
 
-    cats = df.select("g", "era", F.concat(F.lit("c"), F.col("x") % 5).alias("cat"))
-    cr = cats.filter(F.col("era") == 1)
-    cc = cats.filter(F.col("era") == 2)
-    for gc in (None, ["g"]):
-        a = chi2_homogeneity(cr, cc, "cat", group_cols=gc).collect()
-        b = chi2_homogeneity_split(cats, "cat", side, group_cols=gc).collect()
-        assert list(map(tuple, a)) == list(map(tuple, b)), ("chi2", gc)
-
 
 def test_split_side_flag_fails_loud_on_bad_value(spark):
     """A side flag outside {1, 2, NULL} must raise, never be silently
@@ -762,11 +756,25 @@ def test_split_side_flag_fails_loud_on_bad_value(spark):
     from pyspark.sql import functions as F
 
     from bangumi_notion_data_integration_project_spark.operators.twosample import (
-        mann_whitney_u_split,
+        two_sample,
     )
 
     df = spark.createDataFrame(
         [(1, 10), (3, 20)], "era: int, x: long"
     )
     with pytest.raises(Exception, match="side flag"):
-        mann_whitney_u_split(df, "x", F.col("era")).collect()
+        two_sample("mwu", df, "x", F.col("era")).collect()
+
+
+def test_two_sample_rejects_an_unknown_kind(spark):
+    """An unknown kind raises ValueError listing the valid kinds,
+    before any plan is built."""
+    from pyspark.sql import functions as F
+
+    from bangumi_notion_data_integration_project_spark.operators.twosample import (
+        two_sample,
+    )
+
+    df = spark.createDataFrame([(1, 10)], "era: int, x: long")
+    with pytest.raises(ValueError, match="'ztest'.*'ab', 'bm', 'chi2'"):
+        two_sample("ztest", df, "x", F.col("era"))
